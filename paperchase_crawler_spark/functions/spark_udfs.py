@@ -1,22 +1,20 @@
-"""Vectorized pandas UDFs used by the engine (input_hint: no per-row Python).
+"""Vectorized UDFs used by the engine (input_hint: no per-row Python).
 
 - ``canonicalize_udf`` — R1 canonicalization, pandas-vectorized common path
   (functions/urlnorm.canon_series).
-- ``fetch_outlinks_map_in_pandas`` — pass-1 "network fetch + parse" stage:
-  a ``mapInPandas`` iterator over Arrow batches evaluating simweb (the
+- ``fetch_outlinks_map_in_arrow`` — pass-1 "network fetch + parse" stage:
+  a ``mapInArrow`` iterator over Arrow batches evaluating simweb (the
   deterministic fake web); outlink sub-hashes run through the numpy
   vectorized XXH64.
-- ``fetch_images_map_in_pandas`` / ``fetch_images_map_in_arrow`` — pass-2
-  image synthesis/decode/encode (the stand-in for network + codec work); the
-  Arrow form is the production hot path (no pandas round-trip for the binary
-  column), the pandas form is its property-tested twin.
+- ``fetch_images_map_in_arrow`` — pass-2 image synthesis/decode/encode (the
+  stand-in for network + codec work), emitted straight into Arrow batches.
+
+Both fetch kernels are pinned row-for-row to simweb's scalar oracle
+(``outlinks_for`` / ``image_for``) by the tests.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -38,53 +36,12 @@ IMAGES_SCHEMA = (
 )
 
 
-def fetch_outlinks_map_in_pandas():
-    """Pass-1 fetch: outlinks + has_image flag only — the expand path never
-    carries image bytes (scale rule: media stays out of wide plans)."""
-
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        from pyspark import TaskContext
-
-        from .hashing import xxh64_u64_vec
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            hashes = pdf["url_hash"].to_numpy("int64")
-            u = hashes.view(np.uint64)
-            with np.errstate(over="ignore"):
-                has = (
-                    xxh64_u64_vec(u * np.uint64(5)) % np.uint64(10)
-                ) < np.uint64(3)
-            yield pd.DataFrame(
-                {
-                    "canon_url": pdf["canon_url"].to_numpy(),
-                    "url_hash": hashes,
-                    "host": pdf["host"].to_numpy(),
-                    "depth": pdf["depth"].to_numpy("int32"),
-                    "disc_seq": pdf["disc_seq"].to_numpy("int64"),
-                    "round_disc": pdf["round_disc"].to_numpy("int32"),
-                    "seq": pdf["seq"].to_numpy("int64"),
-                    "status": 200,
-                    "outlinks": simweb.outlinks_batch(hashes),
-                    "has_image": has,
-                    "fetch_partition": pid,
-                }
-            )
-
-    return _fetch
-
-
 def fetch_outlinks_map_in_arrow():
     """Pass-1 fetch, Arrow-native (mapInArrow): the outlink list column is
     assembled as a ``pa.ListArray`` over a flat string array built by
     vectorized pyarrow kernels (simweb.outlinks_batch_arrow) — no pandas
-    block manager and, unlike the pandas form, NO per-link Python string
-    objects (~1M per 2M-URL round). Same output as
-    fetch_outlinks_map_in_pandas (parity-pinned in tests/test_simweb.py);
-    this is the production hot path."""
+    block manager and NO per-link Python string objects (~1M per 2M-URL
+    round)."""
     import numpy as np
     import pyarrow as pa
 
@@ -130,47 +87,18 @@ def fetch_outlinks_map_in_arrow():
     return _fetch
 
 
-def fetch_images_map_in_pandas(with_bytes: bool = True):
-    """Pass-2 fetch: decode/synthesize + encode images for rows already known
-    to carry one; output is corpus-shaped and goes straight to the sink."""
+def fetch_images_map_in_arrow(with_bytes: bool = True):
+    """Pass-2 fetch, Arrow-native (mapInArrow): encoded image buffers go
+    straight into a pyarrow RecordBatch — no pandas block manager, no
+    per-cell bytes-object round-trip through a DataFrame: for the ~60 KB/row
+    binary column a pandas wrapper is pure overhead (SURVEY.md §2.2
+    mapInArrow row). Only rows already known to carry an image are fed in;
+    the output is corpus-shaped and goes straight to the sink."""
+    import pyarrow as pa
 
     CHUNK = 256  # ~60KB/image ⇒ ~16MB Arrow batches: bounds worker memory
     # and pipelines the python→JVM transfer (a full 8192-row input batch
     # would emit a ~500MB Arrow batch and stall the JVM ingest side)
-
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), CHUNK):
-                part = pdf.iloc[lo : lo + CHUNK]
-                if part.empty:
-                    continue
-                hashes = part["url_hash"].to_numpy("int64")
-                img = simweb.images_batch(hashes, with_bytes=with_bytes)
-                yield pd.DataFrame(
-                    {
-                        "image_id": part["canon_url"].to_numpy(),
-                        "bytes": img["bytes"],
-                        "w": img["w"],
-                        "h": img["h"],
-                        "fmt": img["fmt"],
-                        "caption": img["caption"],
-                        "phash": img["phash"],
-                    }
-                )
-
-    return _fetch
-
-
-def fetch_images_map_in_arrow(with_bytes: bool = True):
-    """Pass-2 fetch, Arrow-native (mapInArrow): encoded image buffers go
-    straight into a pyarrow RecordBatch — no pandas block manager, no
-    per-cell bytes-object round-trip through a DataFrame. Same output as
-    fetch_images_map_in_pandas (pinned by tests/test_simweb.py); this is the
-    hot path for the ~60 KB/row binary column, where the pandas wrapper is
-    pure overhead (SURVEY.md §2.2 mapInArrow row)."""
-    import pyarrow as pa
-
-    CHUNK = 256  # ~16MB output batches — same sizing rationale as the pandas path
 
     def _fetch(batches):
         for rb in batches:

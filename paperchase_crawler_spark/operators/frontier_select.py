@@ -487,37 +487,35 @@ def select_frontier_round(
     for ≲10^7 hosts). At the extreme design point (10^8 hosts, multi-GB
     dimension) pass False — the eligibility join then shuffles on host,
     which is O(candidates + hosts), still never O(frontier)."""
-    from .ordering import global_topk_ranked
+    from .ordering import ranked_cut
     from .politeness import R3_KEYS, eligible_hosts
 
     hs = F.broadcast(host_state_df) if broadcast_hosts else host_state_df
 
-    def _cut(cand: DataFrame) -> DataFrame:
+    def _ranked(cand: DataFrame, below=None):
         elig = eligible_hosts(cand.join(hs, on="host", how="inner"), round_no)
-        return exact_per_host_cut(elig, salts)
+        ranked, n_sel, n_below = ranked_cut(
+            exact_per_host_cut(elig, salts), R3_KEYS, "seq", k=budget,
+            start=rank_start, count_pred=below,
+        )
+        # the take-ordered cut runs no job: this count is its one job, and it
+        # materializes the cut's checkpoint
+        return ranked, ranked.count() if n_sel is None else n_sel, n_below
 
     cand, tau, info = select_candidates_pruned(
         spark, tbl, max_tokens, budget, prune_overscan, max_scan_frac
     )
     if tau is None:
-        ranked, n_sel = global_topk_ranked(
-            _cut(cand), R3_KEYS, budget, "seq", rank_start, with_total=True
-        )
+        ranked, n_sel, _ = _ranked(cand)
         return ranked, {**info, "fallback": False, "n_selected": n_sel}
     below = (F.col("depth") < tau[0]) | (
         (F.col("depth") == tau[0]) & (F.col("disc_seq") < tau[1])
     )
-    ranked, n_below, n_sel = global_topk_ranked(
-        _cut(cand), R3_KEYS, budget, "seq", rank_start, count_pred=below,
-        with_total=True,
-    )
+    ranked, n_sel, n_below = _ranked(cand, below)
     if n_below >= budget:
         return ranked, {**info, "fallback": False, "n_selected": n_sel}
     # the skipped buckets might have contributed — exact fallback: full scan
-    full = select_candidates(spark, tbl, max_tokens)
-    ranked, n_sel = global_topk_ranked(
-        _cut(full), R3_KEYS, budget, "seq", rank_start, with_total=True
-    )
+    ranked, n_sel, _ = _ranked(select_candidates(spark, tbl, max_tokens))
     return ranked, {**info, "fallback": True, "n_selected": n_sel}
 
 

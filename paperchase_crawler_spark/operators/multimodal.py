@@ -1,12 +1,10 @@
-"""Multimodal (image/audio/video-as-binary) column operators.
+"""Multimodal (image-as-binary) column operators.
 
 Treats media as opaque ``binary`` columns with typed metadata, processed via
 Arrow-batched ``mapInPandas`` (never per-row Python UDFs). The image path is
 REAL end-to-end against the engine's own corpus tables (our pure-numpy
-ppm/png/qdct codecs). Audio/video decode is STUBBED — this sandbox ships no
-media libraries (SURVEY.md §0.1) — but the Spark-side plumbing (schema,
-batching, partitioning, UDF signatures) is real and tested; swap the stub
-body for pyav/soundfile on a real cluster.
+ppm/png/qdct codecs). No audio/video decode: this sandbox ships no media
+libraries (SURVEY.md §0.1).
 
 Scale notes: media bytes never enter a shuffle — decode stages are
 narrow (mapInPandas on the scan), and reductions emit fixed-size features
@@ -87,35 +85,3 @@ def resize_images(corpus: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
     return corpus.select("image_id", "bytes", "fmt").mapInPandas(_resize, RESIZE_SCHEMA)
 
-
-def audio_decode_stub(df: DataFrame) -> DataFrame:
-    """Audio decode plumbing: (clip_id, bytes) → (clip_id, n_samples, rms).
-
-    STUB: no audio codec ships in this sandbox. The batch shape, schema and
-    partitioning are the real design; the decode body raises."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:
-            raise NotImplementedError(
-                "audio decode requires a codec library (none in sandbox); "
-                "replace this body with soundfile/librosa on a real cluster"
-            )
-        yield pd.DataFrame()
-
-    return df.mapInPandas(_decode, "clip_id string, n_samples long, rms double")
-
-
-def video_frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling plumbing: (video_id, bytes) → one row per sampled
-    frame. STUB decode (no pyav in sandbox); real batching/schema."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:
-            raise NotImplementedError(
-                "video decode requires pyav/ffmpeg (none in sandbox)"
-            )
-        yield pd.DataFrame()
-
-    return df.mapInPandas(
-        _sample, "video_id string, frame_idx int, frame_bytes binary"
-    )

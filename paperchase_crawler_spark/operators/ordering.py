@@ -1,19 +1,26 @@
 """Exact global total-order rank / top-k without a single-partition sort.
 
 A naive ``row_number().over(Window.orderBy(...))`` or a full ``orderBy`` pulls
-every row through ONE task — the classic scale killer (SURVEY.md §4.3). These
-operators keep the cut exact while staying distributed:
+every row through ONE task — the classic scale killer (SURVEY.md §4.3).
+``ranked_cut`` keeps the cut exact while staying distributed, on one of two
+paths:
 
-1. ``repartitionByRange`` on the total-order key → partition i holds a
-   contiguous key range, ranges ascending with i.
-2. per-partition row counts (one tiny job, P rows to the driver),
-3. driver-side cumulative sum → per-partition rank offsets (or the boundary
-   partition for top-k),
-4. ``row_number`` windowed *within* each range partition (+ offset).
+- **take-ordered** (a cut or row bound ≤ TAKE_ORDERED_MAX_K): sort+limit
+  plans as TakeOrderedAndProject — per-partition bounded heaps merged into
+  one sorted partition of ≤ k rows — and the rank is a ``row_number`` over
+  that already-single, already-sorted partition (no extra exchange or sort).
+- **range-partitioned**:
+
+  1. ``repartitionByRange`` on the total-order key → partition i holds a
+     contiguous key range, ranges ascending with i.
+  2. per-partition row counts (one tiny job, P rows to the driver),
+  3. driver-side cumulative sum → per-partition rank offsets and the
+     boundary partition of the cut,
+  4. ``row_number`` windowed *within* each range partition (+ offset).
 
 Result is exact and deterministic whenever the key tuple is unique (ours is:
 disc_seq is unique), independent of physical partitioning. Memory per task is
-O(rows/P); nothing global ever materializes in one place.
+O(rows/P) on the range path; nothing global ever materializes in one place.
 """
 
 from __future__ import annotations
@@ -23,6 +30,15 @@ from pyspark.sql import functions as F
 
 _PID = "__pid"
 _RN = "__rn"
+_RANK = "__rank"
+
+# Below this k, sort+limit plans as TakeOrderedAndProject: every partition
+# keeps a k-row bounded heap and only P×k rows reach the final merge — no
+# range-exchange, no sampling pass, no counts job, and no full sort of any
+# partition. Above it, P×k rows through one merge stops being small and the
+# range-partitioned path (sampling job + counts job, but fully distributed)
+# wins. 64k keeps the merge ≤ a few MB per thousand partitions.
+TAKE_ORDERED_MAX_K = 65_536
 
 
 def _range_partitioned(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -41,218 +57,106 @@ def _range_partitioned(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def with_global_rank(
-    df: DataFrame, keys: list[str], rank_col: str, start: int = 0,
-    with_total: bool = False, max_rows: int | None = None,
-):
-    """Add ``rank_col`` = 0-based position of each row in the total order
-    given by ``keys`` (ascending), offset by ``start``. Exact, distributed.
-    ``with_total`` returns ``(df, total_rows)`` — the count is already known
-    from the per-partition counts job, so callers needing it skip their own
-    count action.
-
-    ``max_rows``: an UPPER BOUND on df's row count, when the caller already
-    holds one (the crawl bounds new discoveries by the collected outlink
-    total). A small bound turns the rank into the same single-job
-    TakeOrderedAndProject positional path as global_topk_ranked — the
-    limit(max_rows) keeps every row because the bound is an upper bound —
-    instead of the sampling pass + counts job of the range path. Bounds
-    above TAKE_ORDERED_MAX_K fall through to the range path, so the hint
-    can never funnel a large set through one partition."""
-    if max_rows is not None and max_rows <= TAKE_ORDERED_MAX_K:
-        top = df.orderBy(*[F.col(k).asc() for k in keys]).limit(max_rows)
-        rank = F.when(
-            F.spark_partition_id() == 0,
-            F.monotonically_increasing_id() + F.lit(start).cast("long"),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    "with_global_rank: take-ordered path expected a single "
-                    "sorted partition"
-                )
-            ).cast("long")
-        )
-        ranked = top.withColumn(rank_col, rank).localCheckpoint(eager=False)
-        if with_total:
-            return ranked, ranked.count()
-        return ranked
-    part = _range_partitioned(df, keys).localCheckpoint(eager=False)
-    counts = {
-        r[_PID]: r["cnt"]
-        for r in part.groupBy(_PID).agg(F.count("*").alias("cnt")).collect()
-    }
-
-    def _ret(out: DataFrame):
-        return (out, sum(counts.values())) if with_total else out
-
-    offsets: dict[int, int] = {}
-    acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if not offsets:
-        return _ret(df.withColumn(rank_col, F.lit(0).cast("long")).limit(0))
-    off_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy(_PID).orderBy(*[F.col(k).asc() for k in keys])
-    return _ret(
-        part.withColumn(_RN, F.row_number().over(w))
-        .withColumn(
-            rank_col,
-            (F.col(_RN).cast("long") - 1 + off_map[F.col(_PID)]).cast("long"),
-        )
-        .drop(_PID, _RN)
-    )
-
-
-def global_topk_ranked(
+def ranked_cut(
     df: DataFrame,
     keys: list[str],
-    k: int,
     rank_col: str,
+    k: int | None = None,
     start: int = 0,
     count_pred=None,
-    with_total: bool = False,
-):
-    """Exact smallest-k rows by ``keys`` WITH their global 0-based rank
-    (+``start``), in one range-partition pass — fuses global_topk +
-    with_global_rank so the crawl SELECT stage pays one shuffle, one
-    checkpoint, one count job instead of two of each.
+    max_rows: int | None = None,
+) -> tuple[DataFrame, int | None, int | None]:
+    """The first ``k`` rows of ``df`` in ascending ``keys`` order (``k=None``:
+    every row), with ``rank_col`` = ``start`` + 0-based global position.
 
-    ``count_pred`` (a boolean Column) piggybacks an exact predicate count on
-    the SAME per-partition counts job and changes the return to
-    ``(df, n_pred)`` — the zone-map pruned SELECT uses it to verify its
-    exactness bound without a second pass (frontier_select). ``with_total``
-    appends ``min(k, total_rows)`` — the exact output size, already known
-    from the per-partition counts — so callers can size downstream stages
-    (the fetch partition count) without their own count job."""
-    if k <= 0:
+    Returns ``(ranked, n_rows, n_pred)``:
+
+    - ``n_rows``: the exact output row count, which the range path's counts
+      job already knows. The take-ordered path runs no job of its own and
+      returns None: a caller that needs the size counts ``ranked``, and that
+      one job also materializes its checkpoint.
+    - ``n_pred``: the exact number of input rows matching ``count_pred`` (a
+      boolean Column), piggybacked on the same counts job — the zone-pruned
+      SELECT verifies its exactness bound with it (frontier_select). None
+      without ``count_pred``; a ``count_pred`` always takes the range path,
+      since it counts the FULL input, not just the cut.
+
+    ``max_rows``: an upper bound on df's row count the caller already holds
+    (the crawl bounds seeds by the seed list and new discoveries by the
+    collected outlink total). With ``k=None``, a bound ≤ TAKE_ORDERED_MAX_K
+    ranks every row on the take-ordered path, and is checked there, not
+    trusted: a row past the bound raises in the same job. Larger bounds take
+    the range path, so the hint can never funnel a large set through one
+    partition."""
+    order = [F.col(c).asc() for c in keys]
+    cut = k if k is not None else max_rows
+    if k is not None and k <= 0:
         # guard BEFORE any job: an empty offsets map would otherwise build
-        # create_map() of VOID type (found by the budget=0 edge test)
-        empty = df.withColumn(rank_col, F.lit(0).cast("long")).limit(0)
-        out = (empty,) if count_pred is None else (empty, 0)
-        if with_total:
-            out = (*out, 0)
-        return out[0] if len(out) == 1 else out
-    if count_pred is None and k <= TAKE_ORDERED_MAX_K:
-        # small-k fast path: TakeOrderedAndProject emits ONE partition in
-        # sort order (per-partition bounded heaps + ordered merge), so the
-        # global rank is just the positional id — no range exchange, no
-        # boundary-sampling pass, no counts collect: a single job, whose
-        # count doubles as the checkpoint materializer AND the exact output
-        # size for with_total. The partition-id guard raises loudly if a
-        # future Spark ever plans this differently instead of mis-ranking
-        # silently. count_pred callers (the zone-pruned SELECT verify) need
-        # per-partition counts over the FULL survivor set and keep the
-        # range-partitioned path below.
-        top = df.orderBy(*[F.col(kk).asc() for kk in keys]).limit(k)
-        rank = F.when(
-            F.spark_partition_id() == 0,
-            F.monotonically_increasing_id() + F.lit(start).cast("long"),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    "global_topk_ranked: take-ordered path expected a single "
-                    "sorted partition"
-                )
-            ).cast("long")
+        # create_map() of VOID type
+        return _empty(df, rank_col), 0, None if count_pred is None else 0
+    if count_pred is None and cut is not None and cut <= TAKE_ORDERED_MAX_K:
+        rank = F.col(_RN) - 1 + F.lit(start).cast("long")
+        if k is None:
+            # max_rows bounds the input, it does not cut it: keep one row
+            # past the bound so an overflow fails stop instead of truncating
+            cut += 1
+            rank = F.when(
+                F.col(_RN) > max_rows,
+                F.raise_error(F.lit(f"ranked_cut: input exceeds max_rows={max_rows}")),
+            ).otherwise(rank)
+        top = df.orderBy(*order).limit(cut)
+        ranked = (
+            top.withColumn(_RN, F.row_number().over(Window.orderBy(*order)))
+            .withColumn(rank_col, rank.cast("long"))
+            .drop(_RN)
         )
-        ranked = top.withColumn(rank_col, rank).localCheckpoint(eager=False)
-        n_out = ranked.count()
-        return (ranked, n_out) if with_total else ranked
+        return ranked.localCheckpoint(eager=False), None, None
+
     part = _range_partitioned(df, keys).localCheckpoint(eager=False)
     aggs = [F.count("*").alias("cnt")]
     if count_pred is not None:
         aggs.append(F.count_if(count_pred).alias("npred"))
     rows = part.groupBy(_PID).agg(*aggs).collect()
-    counts = sorted((r[_PID], r["cnt"]) for r in rows)
-    n_pred = sum(r["npred"] for r in rows) if count_pred is not None else None
-    n_out = min(k, sum(c for _, c in counts))
-
-    def _ret(out: DataFrame):
-        parts = (out,) if count_pred is None else (out, n_pred)
-        if with_total:
-            parts = (*parts, n_out)
-        return parts[0] if len(parts) == 1 else parts
-
-    if not counts:
-        return _ret(df.withColumn(rank_col, F.lit(0).cast("long")).limit(0))
+    n_pred = None if count_pred is None else sum(r["npred"] for r in rows)
+    total = sum(r["cnt"] for r in rows)
+    n_rows = total if k is None else min(k, total)
+    if n_rows == 0:
+        return _empty(df, rank_col), 0, n_pred
     acc = 0
     offsets: dict[int, int] = {}
     boundary_pid, take_in_boundary = None, 0
-    for pid, cnt in counts:
-        if acc >= k:
+    for pid, cnt in sorted((r[_PID], r["cnt"]) for r in rows):
+        if acc >= n_rows:
             break
         offsets[pid] = acc + start
-        if acc + cnt > k:
-            boundary_pid, take_in_boundary = pid, k - acc
+        if acc + cnt > n_rows:
+            boundary_pid, take_in_boundary = pid, n_rows - acc
         acc += cnt
-    kept = part.filter(F.col(_PID).isin(list(offsets)))
-    w = Window.partitionBy(_PID).orderBy(*[F.col(kk).asc() for kk in keys])
+    # a cut drops the range partitions past it with a metadata-only filter
+    kept = part if k is None else part.filter(F.col(_PID).isin(list(offsets)))
+    w = Window.partitionBy(_PID).orderBy(*order)
     ranked = kept.withColumn(_RN, F.row_number().over(w))
     if boundary_pid is not None:
         ranked = ranked.filter(
             (F.col(_PID) != boundary_pid) | (F.col(_RN) <= take_in_boundary)
         )
     off_map = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    return _ret(
-        ranked.withColumn(
-            rank_col,
-            (F.col(_RN).cast("long") - 1 + off_map[F.col(_PID)]).cast("long"),
-        ).drop(_PID, _RN)
-    )
+    ranked = ranked.withColumn(
+        rank_col,
+        (F.col(_RN).cast("long") - 1 + off_map[F.col(_PID)]).cast("long"),
+    ).drop(_PID, _RN)
+    return ranked, n_rows, n_pred
 
 
-# Below this k, sort+limit plans as TakeOrderedAndProject: every partition
-# keeps a k-row bounded heap and only P×k rows reach the final merge — no
-# range-exchange, no sampling pass, no counts job, and no full sort of any
-# partition. Above it, P×k rows through one merge stops being small and the
-# range-partitioned path (sampling job + counts job, but fully distributed)
-# wins. 64k keeps the merge ≤ a few MB per thousand partitions.
-TAKE_ORDERED_MAX_K = 65_536
+def _empty(df: DataFrame, rank_col: str) -> DataFrame:
+    return df.withColumn(rank_col, F.lit(0).cast("long")).limit(0)
 
 
 def global_topk(df: DataFrame, keys: list[str], k: int) -> DataFrame:
     """Exact smallest-k rows by ``keys``. Small k (the common case: crawl
     budgets, report top-k) goes through sort+limit = TakeOrderedAndProject —
-    per-partition bounded heaps, one job, zero extra actions. Large k keeps
-    the range-partitioned exact cut: only the single boundary range
-    partition pays a window; partitions entirely inside/outside the cut are
-    passed/dropped by a metadata-only filter."""
-    if k <= 0:
-        return df.limit(0)
+    per-partition bounded heaps, one job, zero extra actions. Larger k is
+    ranked_cut's range path with the rank dropped."""
     if k <= TAKE_ORDERED_MAX_K:
-        return df.orderBy(*[F.col(kk).asc() for kk in keys]).limit(k)
-    part = _range_partitioned(df, keys).localCheckpoint(eager=False)
-    counts = sorted(
-        (r[_PID], r["cnt"])
-        for r in part.groupBy(_PID).agg(F.count("*").alias("cnt")).collect()
-    )
-    total = sum(c for _, c in counts)
-    if total <= k:
-        return part.drop(_PID)
-    acc = 0
-    boundary_pid, take_in_boundary = -1, 0
-    keep_full: list[int] = []
-    for pid, cnt in counts:
-        if acc + cnt <= k:
-            keep_full.append(pid)
-            acc += cnt
-            if acc == k:
-                break
-        else:
-            boundary_pid, take_in_boundary = pid, k - acc
-            break
-    full = part.filter(F.col(_PID).isin(keep_full)) if keep_full else None
-    if take_in_boundary > 0:
-        w = Window.partitionBy(_PID).orderBy(*[F.col(kk).asc() for kk in keys])
-        edge = (
-            part.filter(F.col(_PID) == boundary_pid)
-            .withColumn(_RN, F.row_number().over(w))
-            .filter(F.col(_RN) <= take_in_boundary)
-            .drop(_RN)
-        )
-        full = edge if full is None else full.unionByName(edge)
-    assert full is not None
-    return full.drop(_PID)
+        return df.orderBy(*[F.col(c).asc() for c in keys]).limit(max(k, 0))
+    return ranked_cut(df, keys, _RANK, k=k)[0].drop(_RANK)

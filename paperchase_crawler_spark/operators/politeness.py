@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ordering import global_topk, global_topk_ranked
+from .ordering import global_topk
 
 R3_KEYS = ["depth", "disc_seq"]
 DEFAULT_SALTS = 8
@@ -37,11 +37,7 @@ def eligible_hosts(joined: DataFrame, round_no: int) -> DataFrame:
     )
 
 
-def per_host_topk_salted(
-    df: DataFrame,
-    n_salts: int = DEFAULT_SALTS,
-    hot_threshold: int | None = None,  # kept for API compat; unused
-) -> DataFrame:
+def per_host_topk_salted(df: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
     """Keep the per-host top ``tokens_per_round`` queued rows by R3 order.
 
     PRECONDITION: ``tokens_per_round`` is constant within each host (it comes
@@ -82,18 +78,7 @@ def select_round(
     round_no: int,
     round_budget: int,
     n_salts: int = DEFAULT_SALTS,
-    rank_col: str | None = None,
-    rank_start: int = 0,
-    hot_threshold: int | None = None,  # kept for API compat; unused
 ) -> DataFrame:
-    """Full R5 selection: delay gate → salted per-host top-k → global budget.
-
-    With ``rank_col`` set, the budget cut also emits each row's exact global
-    R3-order rank (fused single pass — the crawl ordering artifact)."""
+    """Full R5 selection: delay gate → salted per-host top-k → global budget."""
     elig = eligible_hosts(queued_with_host_state, round_no)
-    per_host = per_host_topk_salted(elig, n_salts, hot_threshold)
-    if rank_col is not None:
-        return global_topk_ranked(
-            per_host, R3_KEYS, round_budget, rank_col, rank_start
-        )
-    return global_topk(per_host, R3_KEYS, round_budget)
+    return global_topk(per_host_topk_salted(elig, n_salts), R3_KEYS, round_budget)

@@ -64,7 +64,7 @@ from ..operators.frontier_select import (
     merged_frontier,
     select_frontier_round,
 )
-from ..operators.ordering import with_global_rank
+from ..operators.ordering import ranked_cut
 from ..operators.robots import blocked_expr, path_col
 from ..operators.seen import BloomSeen, filter_new, filter_new_bucketed
 from ..schemas import HOST_STATE, HOST_TOUCH
@@ -153,26 +153,15 @@ class CrawlRunner:
     def _ckpt_path(self) -> str:
         return os.path.join(self.workdir, "CHECKPOINT")
 
-    def _materialize(self, df: DataFrame) -> DataFrame:
-        """Cut lineage on a DataFrame several commit chains will re-read.
-        Mode "local": localCheckpoint (eager). Mode "disk": persist
-        DISK_ONLY + materialize now — executor-loss-safe; the round
-        unpersists after its checkpoint commits."""
-        if self.checkpoint == "local":
-            return df.localCheckpoint()
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        out.count()
-        self._round_persists.append(out)
-        return out
-
     def _materialize_lazy(self, df: DataFrame) -> DataFrame:
-        """Same lineage cut as _materialize, but WITHOUT its own
-        materializing job: the caller's immediately-following action (a
-        metrics collect, a counts job) computes every partition and thereby
-        materializes the checkpoint/persist as a side effect — one job where
-        the eager form paid two (guide §1.2: per-round fixed costs)."""
+        """Cut lineage on a DataFrame several commit chains will re-read.
+        Mode "local": localCheckpoint. Mode "disk": persist DISK_ONLY —
+        executor-loss-safe; the round unpersists after its checkpoint
+        commits. Neither runs a materializing job of its own: the caller's
+        immediately-following action (a metrics collect, a counts job)
+        computes every partition and thereby materializes the
+        checkpoint/persist as a side effect — one job where an eager cut
+        would pay two (guide §1.2: per-round fixed costs)."""
         if self.checkpoint == "local":
             return df.localCheckpoint(eager=False)
         from pyspark import StorageLevel
@@ -490,13 +479,14 @@ class CrawlRunner:
             .agg(F.min(F.struct("seed_idx", "canon_url")).alias("s"))
             .select("url_hash", "s.seed_idx", "s.canon_url")
         )
-        # the rank op's counts job already knows the total — no second count;
         # the seed list length bounds the deduped row count, so small seed
-        # sets take the single-job positional path
-        ranked, n_seeds = with_global_rank(
-            dedup, ["seed_idx"], "disc_seq", start=0, with_total=True,
-            max_rows=len(seeds),
+        # sets take the take-ordered path, whose one job is this count; large
+        # ones take the range path, whose counts job already knows the total
+        ranked, n_seeds, _ = ranked_cut(
+            dedup, ["seed_idx"], "disc_seq", max_rows=len(seeds)
         )
+        if n_seeds is None:
+            n_seeds = ranked.count()
         rows = self._new_frontier_rows(
             ranked.withColumn("depth", F.lit(0)), round_disc=0
         )
@@ -731,11 +721,11 @@ class CrawlRunner:
             new = filter_new(dedup, self.seen.read(spark))
             seen_info = {"path": "exact_full_scan"}
         # the collected outlink total upper-bounds the new-row count, so a
-        # small round ranks via the single-job positional path (ordering)
-        new_ranked = with_global_rank(
+        # small round ranks on the take-ordered path, with no job of its own
+        new_ranked = ranked_cut(
             new, ["seq", "pos"], "disc_seq_new", start=self.next_disc_seq,
             max_rows=n_outlinks_total,
-        ).select(
+        )[0].select(
             "canon_url",
             "url_hash",
             "depth",

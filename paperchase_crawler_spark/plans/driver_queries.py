@@ -26,6 +26,7 @@ from ..functions import text as T
 from ..functions.spark_udfs import canonicalize_udf
 from ..operators import dedup as D
 from ..operators import similarity as S
+from ..operators.dedup import _spread
 from ..operators.ordering import global_topk
 from ..operators.politeness import select_round
 from ..streaming.events import hourly_type_counts
@@ -35,17 +36,6 @@ DEC = "decimal(28,6)"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _tspread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan + rebalance for queries whose per-row column work (regex/HOF/md5
-    fan-outs) dwarfs the scan: a small-SF table is one parquet file → ONE
-    task, so the whole computation ran single-threaded (measured: langid /
-    fingerprint spent their time in one task). No-op when the file count
-    already provides parallelism — the same rule as operators/dedup._spread."""
-    from ..operators.dedup import _spread
-
-    return _spread(_t(spark, sf_dir, name))
 
 
 def _dsum(col) -> F.Column:
@@ -917,7 +907,7 @@ FROM scored QUALIFY rank <= 3
 
 
 def q_text_quality(spark, sf):
-    d = _tspread(spark, sf, "documents")
+    d = _spread(_t(spark, sf, "documents"))
     per_doc = d.select(
         "source",
         T.token_count_ws(F.col("text")).alias("tok_ws"),
@@ -953,7 +943,7 @@ def q_langid(spark, sf):
     more than once. Output identical to T.langid by construction (same hit
     counts, same argmax, same earlier-language tie-break — pinned by a
     parity test)."""
-    d = _tspread(spark, sf, "documents")
+    d = _spread(_t(spark, sf, "documents"))
     langs = list(T.STOPWORDS)
     staged = d.select(
         "lang", F.transform(T.words(F.col("text")), F.lower).alias("__lw")
@@ -1012,7 +1002,7 @@ SQL_LANGID = _sql_langid()
 
 
 def q_fingerprint(spark, sf):
-    d = _tspread(spark, sf, "documents")
+    d = _spread(_t(spark, sf, "documents"))
     return (
         d.select("source", T.fingerprint(F.col("text"), k=4).alias("fp"))
         .groupBy("source")

@@ -192,51 +192,13 @@ def host_state_rows(last_round: int = -(10**6)) -> list[dict]:
 # --- vectorized (engine) path ----------------------------------------------
 
 
-def outlinks_batch(url_hash: np.ndarray) -> list[list[str]]:
-    """Vectorized outlink extraction for a batch of signed-int64 hashes.
-
-    numpy for every hash/Zipf draw; string assembly is a flat comprehension
-    over precomputed integer arrays (identical output to outlinks_for per
-    row — property-tested in tests/test_simweb.py).
-    """
-    u = url_hash.astype(np.int64).view(np.uint64)
-    n = (xxh64_u64_vec(u) % np.uint64(MAX_LINKS)).astype(np.int64)
-    m = len(u)
-    if m == 0:
-        return []
-    with np.errstate(over="ignore"):
-        base13 = u * np.uint64(13)
-        base17 = u * np.uint64(17)
-        i_cols = np.arange(MAX_LINKS, dtype=np.uint64)
-        hz = xxh64_u64_vec((base13[:, None] + i_cols[None, :]).ravel()).reshape(
-            m, MAX_LINKS
-        )
-        pid = (
-            xxh64_u64_vec((base17[:, None] + i_cols[None, :]).ravel()).reshape(
-                m, MAX_LINKS
-            )
-            % np.uint64(PAGES_PER_HOST)
-        ).astype(np.int64)
-    z = np.searchsorted(_ZIPF_CDF, hz / 2.0**64, side="right")
-    out: list[list[str]] = []
-    for r in range(m):
-        k = int(n[r])
-        out.append(
-            [
-                f"https://host{z[r, i]}.example/page/{pid[r, i]}"
-                for i in range(k)
-            ]
-        )
-    return out
-
-
 def outlinks_batch_arrow(url_hash: np.ndarray):
     """Arrow-native outlink extraction: returns (offsets, flat_urls) for a
-    ``pa.ListArray`` — the same links as ``outlinks_batch`` (property-tested)
-    but assembled entirely inside numpy + pyarrow compute, so no Python
-    string object is ever created. The f-string comprehension in
-    ``outlinks_batch`` was ~1M interpreter-built strings per 2M-URL frontier
-    round (guide §4.2: hand whole batches to vectorized native kernels)."""
+    ``pa.ListArray`` — the same links as ``outlinks_for`` per row
+    (property-tested) but assembled entirely inside numpy + pyarrow compute,
+    so no Python string object is ever created — per-link strings would be
+    ~1M interpreter-built objects per 2M-URL frontier round (guide §4.2:
+    hand whole batches to vectorized native kernels)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.spark_udfs import canonicalize_udf
 from ..operators.frontier_select import compute_frontier_zones, frontier_bucket_col
-from ..operators.ordering import with_global_rank
+from ..operators.ordering import ranked_cut
 from ..operators.robots import blocked_expr, path_col
 from ..operators.seen import anti_join_seen
 from ..sources.icetable import IceTable
@@ -229,7 +229,7 @@ def ingest_batch(
     )
     new = anti_join_seen(dedup, seen.read(spark))
     next_seq = frontier_disc_hwm(frontier)
-    ranked = with_global_rank(new, ["src_seq"], "disc_seq", start=next_seq)
+    ranked, _, _ = ranked_cut(new, ["src_seq"], "disc_seq", start=next_seq)
     hosts = ranked.withColumn(
         "host", F.lower(F.parse_url("canon_url", F.lit("HOST")))
     )

@@ -190,7 +190,7 @@ def test_pruned_select_equals_full_and_skips_buckets(spark, tbl):
         select_candidates,
         select_frontier_round,
     )
-    from paperchase_crawler_spark.operators.ordering import global_topk_ranked
+    from paperchase_crawler_spark.operators.ordering import ranked_cut
     from paperchase_crawler_spark.operators.politeness import R3_KEYS, eligible_hosts
 
     # host i's rows all sit at depth i → bucket zone mins differ sharply
@@ -210,7 +210,7 @@ def test_pruned_select_equals_full_and_skips_buckets(spark, tbl):
     elig = eligible_hosts(full.join(F.broadcast(hs), "host", "inner"), 1)
     from paperchase_crawler_spark.operators.frontier_select import exact_per_host_cut
 
-    ref = global_topk_ranked(exact_per_host_cut(elig, 1), R3_KEYS, 12, "seq", 0)
+    ref = ranked_cut(exact_per_host_cut(elig, 1), R3_KEYS, "seq", k=12)[0]
     assert _ranked_set(ranked) == _ranked_set(ref)
     assert info["pruned"] is True
     assert info["fallback"] is False
@@ -400,7 +400,7 @@ def test_pruned_select_randomized_equivalence(spark, tmp_path):
         select_candidates,
         select_frontier_round,
     )
-    from paperchase_crawler_spark.operators.ordering import global_topk_ranked
+    from paperchase_crawler_spark.operators.ordering import ranked_cut
     from paperchase_crawler_spark.operators.politeness import R3_KEYS, eligible_hosts
 
     for seed in range(4):
@@ -439,7 +439,7 @@ def test_pruned_select_randomized_equivalence(spark, tmp_path):
         got_df, info = select_frontier_round(
             spark, tbl, hs, round_no=1, budget=budget, max_tokens=8, salts=salts
         )
-        ref = global_topk_ranked(
+        ref = ranked_cut(
             exact_per_host_cut(
                 eligible_hosts(
                     select_candidates(spark, tbl, 8).join(
@@ -449,8 +449,8 @@ def test_pruned_select_randomized_equivalence(spark, tmp_path):
                 ),
                 salts,
             ),
-            R3_KEYS, budget, "seq", 0,
-        )
+            R3_KEYS, "seq", k=budget,
+        )[0]
         assert _ranked_set(got_df) == _ranked_set(ref), (seed, info)
 
 

@@ -9,12 +9,7 @@ from pyspark.sql import functions as F
 from paperchase_crawler_spark import simweb
 from paperchase_crawler_spark.codecs import decode_image
 from paperchase_crawler_spark.functions.hashing import xxh64_str
-from paperchase_crawler_spark.operators.multimodal import (
-    audio_decode_stub,
-    image_features,
-    resize_images,
-    video_frame_sample_stub,
-)
+from paperchase_crawler_spark.operators.multimodal import image_features, resize_images
 from paperchase_crawler_spark.schemas import CORPUS
 
 
@@ -52,12 +47,3 @@ def test_resize(spark, corpus):
         rgb = decode_image(bytes(r.bytes), r.fmt)
         assert rgb.shape == (16, 16, 3)
 
-
-def test_stubs_are_wired_but_unimplemented(spark):
-    df = spark.createDataFrame([("a", b"xx")], "clip_id string, bytes binary")
-    with pytest.raises(Exception, match="NotImplementedError|audio decode"):
-        audio_decode_stub(df).collect()
-    vdf = spark.createDataFrame([("v", b"yy")], "video_id string, bytes binary")
-    assert video_frame_sample_stub(vdf).schema.simpleString() == (
-        "struct<video_id:string,frame_idx:int,frame_bytes:binary>"
-    )

@@ -100,13 +100,14 @@ def test_fingerprint_nondistinct_matches_distinct(spark):
     assert ga == gb and len(ga) > 0
 
 
-def test_global_topk_small_k_is_take_ordered(spark):
+def test_global_topk_small_k_is_take_ordered(spark, monkeypatch):
     """Small k must plan as TakeOrderedAndProject (bounded per-partition
     heaps, no range exchange, no sampling/count jobs); large k keeps the
     range-partitioned exact cut."""
     from paperchase_crawler_spark.operators.ordering import (
         TAKE_ORDERED_MAX_K,
         global_topk,
+        ranked_cut,
     )
 
     df = spark.range(10_000).select(
@@ -118,6 +119,25 @@ def test_global_topk_small_k_is_take_ordered(spark):
     big = global_topk(df, ["depth", "disc_seq"], TAKE_ORDERED_MAX_K + 1)
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" not in plan_big
+    # the ranked small-k cut: the row_number Window sits directly on the
+    # single sorted TakeOrderedAndProject partition — no Exchange or Sort
+    # between them (plan of the DataFrame the cut checkpoints; nothing runs,
+    # so a max_rows below the row count keeps the limit in the plan)
+    checkpointed = []
+    local_checkpoint = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    for kw in ({"k": 100}, {"max_rows": 5_000}):
+        ranked_cut(df, ["depth", "disc_seq"], "rank", **kw)
+        ranked_plan = checkpointed[-1]._jdf.queryExecution().executedPlan().toString()
+        assert "TakeOrderedAndProject" in ranked_plan, kw
+        above = ranked_plan.split("TakeOrderedAndProject")[0]
+        assert "Window" in above, kw
+        assert "Exchange" not in above and "Sort " not in above, kw
 
 
 def test_minhash_numeric_band_keys_match_string_form(spark):
@@ -146,36 +166,35 @@ def test_minhash_numeric_band_keys_match_string_form(spark):
     assert got == sorted(want) and len(got) > 0
 
 
-def test_with_global_rank_max_rows_hint_matches_range_path(spark):
-    """The max_rows upper-bound hint must yield exactly the range path's
-    ranks (positional id over the single TakeOrdered partition), for bounds
-    equal to, above, and far above the true row count — and fall back to
-    the range path past TAKE_ORDERED_MAX_K."""
+def test_ranked_cut_max_rows_bound_matches_range_path(spark):
+    """The max_rows upper bound must yield exactly the range path's ranks
+    (row_number over the single TakeOrdered partition), for bounds equal to,
+    above, and far above the true row count, and fall back to the range path
+    past TAKE_ORDERED_MAX_K. A bound below the true row count is a broken
+    promise: it must raise, never truncate silently."""
     import random
+
+    import pytest
 
     from paperchase_crawler_spark.operators.ordering import (
         TAKE_ORDERED_MAX_K,
-        with_global_rank,
+        ranked_cut,
     )
 
     rng = random.Random(9)
     rows = [(rng.randrange(7), i) for i in range(400)]
     rng.shuffle(rows)
     df = spark.createDataFrame(rows, "depth int, disc_seq long").repartition(5)
-    want = {
-        r.disc_seq: r.rank
-        for r in with_global_rank(df, ["depth", "disc_seq"], "rank", start=3).collect()
-    }
+    keys = ["depth", "disc_seq"]
+    want = {r.disc_seq: r.rank for r in ranked_cut(df, keys, "rank", start=3)[0].collect()}
     for bound in (400, 401, 5000, TAKE_ORDERED_MAX_K, TAKE_ORDERED_MAX_K + 1):
-        out, total = with_global_rank(
-            df, ["depth", "disc_seq"], "rank", start=3, with_total=True,
-            max_rows=bound,
-        )
+        out, n_rows, _ = ranked_cut(df, keys, "rank", start=3, max_rows=bound)
         got = {r.disc_seq: r.rank for r in out.collect()}
-        assert got == want and total == 400, bound
-    out0 = with_global_rank(
-        df.limit(0), ["depth", "disc_seq"], "rank", max_rows=0
-    )
+        assert got == want and (n_rows is None or n_rows == 400), bound
+    for bound in (0, 399):
+        with pytest.raises(Exception, match="exceeds max_rows"):
+            ranked_cut(df, keys, "rank", max_rows=bound)[0].collect()
+    out0 = ranked_cut(df.limit(0), keys, "rank", max_rows=0)[0]
     assert out0.count() == 0
 
 
@@ -285,15 +304,15 @@ def test_capped_shingles_broadcast_guard(spark):
     assert a == b and len(a) > 0
 
 
-def test_fetch_outlinks_arrow_matches_pandas(spark):
-    """The Arrow-native pass-1 fetch (no Python string objects) must emit
-    byte-identical rows to the pandas form it replaced in the crawl loop."""
-    from pyspark.sql import functions as F
-
+def test_fetch_outlinks_arrow_matches_scalar(spark):
+    """The Arrow-native pass-1 fetch (no Python string objects) must emit,
+    for every input row, the row passed through plus status 200, the scalar
+    oracle's outlinks (simweb.outlinks_for) and has_image ⇔
+    simweb.image_for(h) is not None."""
+    from paperchase_crawler_spark import simweb
     from paperchase_crawler_spark.functions.spark_udfs import (
         OUTLINKS_SCHEMA,
         fetch_outlinks_map_in_arrow,
-        fetch_outlinks_map_in_pandas,
     )
 
     df = spark.range(500).select(
@@ -307,16 +326,19 @@ def test_fetch_outlinks_arrow_matches_pandas(spark):
         F.col("id").alias("seq"),
     ).repartition(3)
 
-    def rows(out_df):
-        return sorted(
-            (r.canon_url, r.url_hash, r.host, r.depth, r.disc_seq,
-             r.round_disc, r.seq, r.status, tuple(r.outlinks), r.has_image)
-            for r in out_df.collect()
-        )
-
-    got = rows(df.mapInArrow(fetch_outlinks_map_in_arrow(), OUTLINKS_SCHEMA))
-    want = rows(df.mapInPandas(fetch_outlinks_map_in_pandas(), OUTLINKS_SCHEMA))
+    got = sorted(
+        (r.canon_url, r.url_hash, r.host, r.depth, r.disc_seq,
+         r.round_disc, r.seq, r.status, tuple(r.outlinks), r.has_image)
+        for r in df.mapInArrow(fetch_outlinks_map_in_arrow(), OUTLINKS_SCHEMA).collect()
+    )
+    want = sorted(
+        (r.canon_url, r.url_hash, r.host, r.depth, r.disc_seq, r.round_disc,
+         r.seq, 200, tuple(simweb.outlinks_for(r.url_hash)),
+         simweb.image_for(r.url_hash) is not None)
+        for r in df.collect()
+    )
     assert got == want and len(got) == 500
+    assert 0 < sum(row[-1] for row in got) < 500
 
 
 def test_outlinks_batch_arrow_matches_scalar(spark):
