@@ -162,9 +162,10 @@ def jaccard_window_cap(docs, cap: int, threshold: float):
     from pyspark.sql import Window
 
     from paperchase_crawler_spark.operators import dedup as D
+    from paperchase_crawler_spark.operators.materialize import Materializer
 
-    sh = D._reuse(D.shingle_table(D._spread(docs), "text", "doc_id", 3),
-                  spread=False)
+    sh, _ = D._reuse(D.shingle_table(D._spread(docs), "text", "doc_id", 3),
+                     Materializer(), spread=False)
     w = Window.partitionBy("shingle")
     sh = (sh.withColumn("__f", F.count("*").over(w))
           .filter(F.col("__f") <= cap).drop("__f"))

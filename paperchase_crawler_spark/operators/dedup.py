@@ -19,124 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_int60, word_kgrams
-
-# Intra-query materialization mode for the whole dedup/similarity suite —
-# the same knob CrawlRunner exposes as checkpoint='local'|'disk' (r4 landed
-# it for the crawl loop only; a cluster user running THIS suite had to edit
-# source for executor-loss safety). "local" = localCheckpoint: fastest, but
-# blocks live only in executor local stores and die with the executor.
-# "disk" = persist(StorageLevel.DISK_ONLY) + eager materialize: survives
-# executor loss at the cost of writing through the block manager. Module
-# level (not a per-call kwarg) because every operator here funnels reused
-# intermediates through _reuse and threading a parameter through five
-# public APIs would churn every call site for one deployment-wide choice.
-_MATERIALIZE_MODE = "local"
-_CHECKPOINT_DIR: str | None = None
-_PERSISTED: list[DataFrame] = []
-
-
-class materialize_mode:
-    """Context manager over set_materialize_mode that GUARANTEES cleanup:
-    restores the previous mode and unpersists every disk-mode persist the
-    block created, even on error — the raw setter leaks DISK_ONLY blocks
-    until unpersist_materialized() in long-lived sessions (ADVICE r5).
-
-    ::
-
-        with materialize_mode("disk", "/ckpt/dir"):
-            pairs = jaccard_pairs(docs, "text", "doc_id")
-            pairs.write.parquet(out)   # materialize INSIDE the block
-    """
-
-    def __init__(self, mode: str, checkpoint_dir: str | None = None):
-        self._mode, self._dir = mode, checkpoint_dir
-
-    def __enter__(self):
-        self._prev = (_MATERIALIZE_MODE, _CHECKPOINT_DIR)
-        self._persisted_before = len(_PERSISTED)
-        set_materialize_mode(self._mode, self._dir)
-        return self
-
-    def __exit__(self, *exc):
-        for df in _PERSISTED[self._persisted_before:]:
-            df.unpersist(blocking=False)
-        del _PERSISTED[self._persisted_before:]
-        set_materialize_mode(*self._prev)
-        return False
-
-
-def set_materialize_mode(mode: str, checkpoint_dir: str | None = None) -> None:
-    """Set 'local' (default) or 'disk' — see _MATERIALIZE_MODE above.
-    Prefer the ``materialize_mode`` context manager in long-lived sessions:
-    bare disk mode accumulates DISK_ONLY persists until
-    unpersist_materialized() is called (they pin executor-disk blocks), and
-    the module-global knob is not safe for concurrent pipelines in one
-    process.
-
-    In disk mode, pass ``checkpoint_dir`` (an HDFS/object-store path on a
-    real cluster) to use RELIABLE ``df.checkpoint()`` — a true lineage cut
-    that survives executor loss. Without a dir, disk mode falls back to
-    persist(DISK_ONLY): the data is loss-safe but the LOGICAL PLAN keeps
-    its full lineage, which is fine for the one-shot operators here but
-    compounds exponentially under iteration — dup_clusters therefore
-    REQUIRES the checkpoint dir in disk mode (measured: the persist-only
-    loop OOMs Catalyst analysis after ~8 self-joining rounds). Persists
-    accumulate until unpersist_materialized(); checkpoint files accumulate
-    under the dir (clean with spark.cleaner.referenceTracking.cleanCheckpoints
-    or by removing the dir after the job)."""
-    global _MATERIALIZE_MODE, _CHECKPOINT_DIR
-    if mode not in ("local", "disk"):
-        raise ValueError("materialize mode must be 'local' or 'disk'")
-    _MATERIALIZE_MODE = mode
-    _CHECKPOINT_DIR = checkpoint_dir
-
-
-def unpersist_materialized(blocking: bool = False) -> int:
-    """Free every disk-mode persist created since the last call. Returns the
-    number of DataFrames unpersisted (0 when reliable checkpoints or local
-    mode carried everything)."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist(blocking=blocking)
-    _PERSISTED.clear()
-    return n
-
-
-def _reliable_ckpt_ready(df: DataFrame) -> bool:
-    sc = df.sparkSession.sparkContext
-    if _CHECKPOINT_DIR is not None:
-        if sc.getCheckpointDir() != _CHECKPOINT_DIR:
-            sc.setCheckpointDir(_CHECKPOINT_DIR)
-        return True
-    return sc.getCheckpointDir() is not None
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Cut lineage + materialize once, per the module materialize mode.
-
-    Every mode stamps the materialized row count on the returned DataFrame
-    as ``_pc_rows``, computed by the SAME job that materializes (the count
-    IS the materializing action for the persist and local paths) — so
-    auto_n_blocks and other size-adaptive pickers read a number that is
-    already paid for instead of launching their own driver-blocking count
-    job per query (r5 verdict "What's wrong" #2)."""
-    if _MATERIALIZE_MODE == "disk":
-        if _reliable_ckpt_ready(df):
-            out = df.checkpoint(eager=True)
-            out._pc_rows = out.count()  # cheap scan of the checkpoint files
-            return out
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        out._pc_rows = out.count()
-        _PERSISTED.append(out)
-        return out
-    # lazy checkpoint + count: ONE job both materializes the local
-    # checkpoint blocks and yields the row count (an eager localCheckpoint
-    # runs the same job and throws the count away)
-    out = df.localCheckpoint(eager=False)
-    out._pc_rows = out.count()
-    return out
+from .materialize import Materializer
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -150,47 +33,29 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _reuse(df: DataFrame, spread: bool = True) -> DataFrame:
-    """Materialize a small intermediate that multiple plan branches (a
-    self-join's two sides, sizes + join) would otherwise RECOMPUTE —
-    signature/shingle computation is the dominant cost of every dedup
-    family, so paying it once halves the query (measured: minhash 9.3 s →
-    ~1.5 s at sf0.1). EAGER on purpose: with a lazy checkpoint the two
-    shuffle-write stages of a self-join run inside one job BEFORE the
-    checkpoint exists and each recomputes the lineage (measured on simhash).
-    ``spread`` re-spreads the checkpoint across cores and matters as much as
-    the checkpoint itself for BROADCAST-join consumers: AQE coalesces the
-    small aggregate to ONE partition, and a broadcast-join PROBE from a
+def _reuse(
+    df: DataFrame, mat: Materializer | None, spread: bool = True
+) -> tuple[DataFrame, int]:
+    """Cut a small intermediate that multiple plan branches (a self-join's
+    two sides, sizes + join) would otherwise RECOMPUTE, and return it with
+    its row count — signature/shingle computation is the dominant cost of
+    every dedup family, so paying it once halves the query (measured:
+    minhash 9.3 s → ~1.5 s at sf0.1). Materialized HERE, by the count: with
+    the cut left to the consumer, the two shuffle-write stages of a
+    self-join run inside one job BEFORE the cut exists and each recomputes
+    the lineage (measured on simhash).
+    ``spread`` re-spreads the cut across cores and matters as much as the
+    cut itself for BROADCAST-join consumers: AQE coalesces the small
+    aggregate to ONE partition, and a broadcast-join PROBE from a
     1-partition stream runs single-threaded — with skewed buckets that probe
     is the whole query (measured: simhash's 8.9M candidate probes in one
     task, 3.5 s → 0.4 s once spread). For SHUFFLE-join consumers pass
     spread=False — the join re-shuffles by its key anyway and the extra
-    round-robin exchange only costs (measured on jaccard: 3.3 s → 2.0 s).
-    Cluster note: set_materialize_mode('disk') switches the whole suite to
-    persist(DISK_ONLY) when executor loss matters."""
-    ck = _materialize(df)
-    if not spread:
-        return ck
-    n = df.sparkSession.sparkContext.defaultParallelism
-    out = ck.repartition(n)
-    out._pc_rows = ck._pc_rows  # carry the piggybacked count through
-    return out
-
-
-def _banding_diag(stage: str, df: DataFrame) -> DataFrame:
-    """Opt-in banding-recall diagnostics (set SPARK_GRAFT_BANDING_DIAG=1):
-    log a banded stage's row count to stderr. The banded jaccard/embedding
-    paths are exact BY CONSTRUCTION on the contract data (the DuckDB twin's
-    hash match proves it), but a future scale-factor bump that changes the
-    shingle-frequency cap's bite or grazes LSH planes should be DIAGNOSABLE
-    (candidate counts collapsing/exploding), not just a red hash. Costs one
-    extra count job per tagged stage, so off by default (r3 advice item)."""
-    import os as _os
-    import sys as _sys
-
-    if _os.environ.get("SPARK_GRAFT_BANDING_DIAG"):
-        print(f"[banding-diag] {stage}: {df.count()} rows", file=_sys.stderr)
-    return df
+    round-robin exchange only costs (measured on jaccard: 3.3 s → 2.0 s)."""
+    ck, n = (mat or Materializer()).counted(df)
+    if spread:
+        ck = ck.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return ck, n
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -258,6 +123,7 @@ def jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-duplicate pairs (doc_a < doc_b, jaccard ≥ t).
 
@@ -275,17 +141,18 @@ def jaccard_pairs(
     # (there the freq-count subplan and the capped projection each exploded
     # the corpus). The self-join is a SHUFFLE join on shingle, so no
     # re-spread needed.
-    raw = _reuse(shingle_table(_spread(df), text_col, id_col, k), spread=False)
+    raw, n_raw = _reuse(
+        shingle_table(_spread(df), text_col, id_col, k), mat, spread=False
+    )
     if max_doc_freq is None:
         sh = raw
     else:
         # the over-cap list holds at most rows/cap entries — decide the
         # anti-join's broadcastability from the count the materialization
-        # already stamped, no extra job (ADVICE r5: the unconditional
+        # already paid for, no extra job (ADVICE r5: the unconditional
         # broadcast was unbounded in the corpus size)
-        bcast = (raw._pc_rows // max_doc_freq) <= CAP_BROADCAST_LIMIT
+        bcast = (n_raw // max_doc_freq) <= CAP_BROADCAST_LIMIT
         sh = capped_shingles(raw, max_doc_freq, broadcast=bcast)
-    sh = _banding_diag("jaccard.shingles_after_cap", sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -297,7 +164,6 @@ def jaccard_pairs(
         )
         .agg(F.count("*").alias("n_inter"))
     )
-    inter = _banding_diag("jaccard.candidate_pairs", inter)
     return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .withColumnRenamed("n_shingles", "na")
@@ -349,6 +215,7 @@ def minhash_lsh_pairs(
     k: int = 3,
     n_hashes: int = 8,
     bands: int = 4,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing any full band of the signature.
 
@@ -395,7 +262,7 @@ def minhash_lsh_pairs(
     )
     # both self-join sides reuse ONE signature computation (the md5 fan-out
     # dominates the query; without this the broadcast side recomputes it)
-    banded = _reuse(banded)
+    banded, _ = _reuse(banded, mat)
     first_match = F.lit(True)
     for b in range(bands - 1):
         differs = F.lit(False)
@@ -490,6 +357,7 @@ def simhash_pairs(
     max_hamming: int = 3,
     banded: bool = True,
     n_blocks: int | None = None,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Near-dup pairs by 60-bit simhash Hamming distance ≤ max_hamming.
 
@@ -504,10 +372,9 @@ def simhash_pairs(
 
     ``banded=False`` keeps the O(N²) pairwise reference (oracle-scale only).
     """
-    s = _reuse(simhash64(_spread(df), text_col, id_col))
-    return hamming_dup_pairs(
-        s, "simhash", "doc_id", bits=SIMHASH_BITS, max_hamming=max_hamming,
-        banded=banded, reused=True, n_blocks=n_blocks,
+    s, n_rows = _reuse(simhash64(_spread(df), text_col, id_col), mat)
+    return _hamming_pairs(
+        s, n_rows, "simhash", "doc_id", SIMHASH_BITS, max_hamming, banded, n_blocks
     )
 
 
@@ -618,8 +485,8 @@ def hamming_dup_pairs(
     bits: int,
     max_hamming: int,
     banded: bool = True,
-    reused: bool = False,
     n_blocks: int | None = None,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Near-dup pairs (doc_a, doc_b, hamming) on a PRECOMPUTED ``bits``-wide
     integer hash column — the shared kernel behind simhash text dedup and
@@ -644,18 +511,21 @@ def hamming_dup_pairs(
 
     ``n_blocks=None`` (default) picks the layout ADAPTIVELY from the
     materialized row count via auto_n_blocks — minimal replication while
-    the corpus is small, wider keys as it grows (the count is one cheap job
-    over the just-materialized hash table). ``banded=False`` is the O(N²)
-    pairwise reference (oracle-scale only). ``reused=True`` skips the
-    internal materialization when the caller already checkpointed ``df``
-    (the self-join would otherwise recompute the hash lineage per side)."""
-    if reused:
-        s = df.select(id_col, hash_col)
-        # the trivial projection drops the caller's _pc_rows stamp — keep it
-        if hasattr(df, "_pc_rows"):
-            s._pc_rows = df._pc_rows
-    else:
-        s = _reuse(_spread(df.select(id_col, hash_col)))
+    the corpus is small, wider keys as it grows (the count is the job that
+    materializes the hash table). ``banded=False`` is the O(N²) pairwise
+    reference (oracle-scale only)."""
+    s, n_rows = _reuse(_spread(df.select(id_col, hash_col)), mat)
+    return _hamming_pairs(
+        s, n_rows, hash_col, id_col, bits, max_hamming, banded, n_blocks
+    )
+
+
+def _hamming_pairs(
+    s: DataFrame, n_rows: int, hash_col: str, id_col: str, bits: int,
+    max_hamming: int, banded: bool, n_blocks: int | None,
+) -> DataFrame:
+    """hamming_dup_pairs over ``s``, already cut, of ``n_rows`` rows (the
+    self-join would otherwise recompute the hash lineage per side)."""
     ida, idb = f"a.{id_col}", f"b.{id_col}"
     hx = F.bit_count(F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}")))
     if not banded:
@@ -669,13 +539,7 @@ def hamming_dup_pairs(
             )
         )
     if n_blocks is None:
-        # the materialization already stamped the row count (_materialize);
-        # the explicit count() is only the fallback for a caller-supplied
-        # pre-materialized frame without the stamp
-        n_rows = getattr(s, "_pc_rows", None)
-        n_blocks = auto_n_blocks(
-            n_rows if n_rows is not None else s.count(), bits, max_hamming
-        )
+        n_blocks = auto_n_blocks(n_rows, bits, max_hamming)
     bounds, combos = _hamming_combos(bits, max_hamming, n_blocks)
 
     def _combo_val(col: Column, combo: tuple[int, ...]) -> Column:
@@ -742,6 +606,7 @@ def image_dup_pairs(
     max_hamming: int = 6,
     banded: bool = True,
     n_blocks: int | None = None,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Corpus-level near-duplicate IMAGE detection: pairs whose 64-bit
     perceptual hash (codecs/phash.py — stored on every corpus row at fetch
@@ -757,7 +622,7 @@ def image_dup_pairs(
     (combo, value) with an in-bucket exact verify."""
     pairs = hamming_dup_pairs(
         df, phash_col, id_col, bits=64, max_hamming=max_hamming, banded=banded,
-        n_blocks=n_blocks,
+        n_blocks=n_blocks, mat=mat,
     )
     return pairs.select(
         F.col("doc_a").alias("img_a"),
@@ -802,6 +667,7 @@ def embedding_dup_pairs(
     rows_per_band: int = 8,
     dim: int = 64,
     seed: int = 42,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine ≥ threshold.
 
@@ -829,7 +695,7 @@ def embedding_dup_pairs(
         lambda acc, x: acc + x,
     )
     if n_bands is None:
-        normed = _reuse(normed)
+        normed, _ = _reuse(normed, mat)
         a, b = normed.alias("a"), normed.alias("b")
         cand = a.join(b, F.col("a.vid") < F.col("b.vid"))
     else:
@@ -850,7 +716,7 @@ def embedding_dup_pairs(
         )
         # both join sides reuse ONE band-code computation (n_bands ×
         # rows_per_band plane dot products per row — the dominant cost)
-        ex = _reuse(ex)
+        ex, _ = _reuse(ex, mat)
         first_match = F.lit(True)
         for j in range(n_bands - 1):
             first_match = first_match & (
@@ -858,15 +724,12 @@ def embedding_dup_pairs(
                 | (F.col("a.codes")[j] != F.col("b.codes")[j])
             )
         a, b = ex.alias("a"), ex.alias("b")
-        cand = _banding_diag(
-            "embedding.banded_candidates",
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.code") == F.col("b.code"))
-                & (F.col("a.vid") < F.col("b.vid"))
-                & first_match,
-            ),
+        cand = a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.code") == F.col("b.code"))
+            & (F.col("a.vid") < F.col("b.vid"))
+            & first_match,
         )
     return (
         cand.withColumn("cosine", dot / (F.col("a.norm") * F.col("b.norm")))
@@ -942,6 +805,7 @@ def dup_clusters(
     jump: bool = True,
     n_salts: int = 8,
     hot_label_cap: int = 1_000_000,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Resolve near-dup PAIRS into CLUSTERS: (doc_id, cluster_id) for every
     id appearing in ``pairs``, cluster_id = the minimum id in the connected
@@ -966,25 +830,33 @@ def dup_clusters(
     of r4's materialize-then-join-and-count two.
 
     Scale shape per round: the jump join and the neighbour lookup both read
-    the previous round's MATERIALIZED labels (materialization honors
-    set_materialize_mode — 'disk' for executor-loss safety; r4 hardcoded
-    localCheckpoint here), and both go through the hot-label salting guard:
+    the previous round's labels, cut through ``mat`` (a disk Materializer
+    for executor-loss safety needs a ``checkpoint_dir``: the iteration
+    requires a true lineage cut), and both go through the hot-label salting guard:
     a giant star component (the shape real boilerplate dedup produces —
     every member looks up the SAME component-min label row) is detected by
     an in-job groupBy count and its label row replicated across ``n_salts``
     tasks, bounding the max task at ~hot_cap instead of the component size.
     """
+    mat = mat or Materializer()
+    if mat.mode == "disk" and mat.checkpoint_dir is None:
+        raise ValueError(
+            "dup_clusters with a disk Materializer needs a reliable "
+            "checkpoint dir for its iterative lineage cut: pass "
+            "Materializer('disk', checkpoint_dir=<hdfs path>)"
+        )
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    sym = _reuse(
+    sym, _ = _reuse(
         edges.unionByName(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct(),
+        mat,
         spread=False,
     )
     labels = sym.select(F.col("a").alias("doc_id")).distinct().withColumn(
         "cluster_id", F.col("doc_id")
     )
-    labels = _reuse(labels, spread=False)
+    labels, _ = _reuse(labels, mat, spread=False)
     for _ in range(max_iter):
         kv = labels.select(
             F.col("doc_id").alias("__k"), F.col("cluster_id").alias("__lab")
@@ -1031,21 +903,8 @@ def dup_clusters(
         # materialization that carries the labels forward (labels only
         # decrease, so __changed is a plain comparison computed in-plan —
         # no r4-style join against the old table). Local mode: the lazy
-        # localCheckpoint and the count share one job. Disk mode: iteration
-        # REQUIRES a true lineage cut (persist keeps the full logical plan,
-        # which compounds exponentially across self-joining rounds until
-        # Catalyst analysis OOMs — measured at ~8 rounds), so reliable
-        # checkpoint is mandatory here.
-        if _MATERIALIZE_MODE == "disk":
-            if not _reliable_ckpt_ready(merged):
-                raise ValueError(
-                    "dup_clusters in disk materialize mode needs a reliable "
-                    "checkpoint dir for its iterative lineage cut: call "
-                    "set_materialize_mode('disk', checkpoint_dir=<hdfs path>)"
-                )
-            new_labels = merged.checkpoint(eager=True)
-        else:
-            new_labels = merged.localCheckpoint(eager=False)
+        # localCheckpoint and the count share one job.
+        new_labels = mat.cut(merged)
         changed = new_labels.filter("__changed").count()
         labels = new_labels.drop("__changed")
         if changed == 0:

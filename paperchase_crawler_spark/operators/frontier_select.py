@@ -38,6 +38,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..schemas import FRONTIER
 from ..sources.icetable import IceTable
+from .materialize import Materializer
 
 # StructType.add mutates in place — build copies
 FRONTIER_REV_SCHEMA = StructType(
@@ -475,6 +476,7 @@ def select_frontier_round(
     prune_overscan: float = 3.0,
     max_scan_frac: float = 0.75,
     broadcast_hosts: bool = True,
+    mat: Materializer | None = None,
 ):
     """The production SELECT stage, shared by the crawl loop and the bench:
     zone-pruned bucket scan → broadcast host_state eligibility (R5 delay) →
@@ -486,7 +488,8 @@ def select_frontier_round(
     ``broadcast_hosts``: the host dimension is broadcast by default (right
     for ≲10^7 hosts). At the extreme design point (10^8 hosts, multi-GB
     dimension) pass False — the eligibility join then shuffles on host,
-    which is O(candidates + hosts), still never O(frontier)."""
+    which is O(candidates + hosts), still never O(frontier). ``mat`` cuts
+    the ranked output (ordering.ranked_cut)."""
     from .ordering import ranked_cut
     from .politeness import R3_KEYS, eligible_hosts
 
@@ -496,7 +499,7 @@ def select_frontier_round(
         elig = eligible_hosts(cand.join(hs, on="host", how="inner"), round_no)
         ranked, n_sel, n_below = ranked_cut(
             exact_per_host_cut(elig, salts), R3_KEYS, "seq", k=budget,
-            start=rank_start, count_pred=below,
+            start=rank_start, count_pred=below, mat=mat,
         )
         # the take-ordered cut runs no job: this count is its one job, and it
         # materializes the cut's checkpoint

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import Materializer
+
 _PID = "__pid"
 _RN = "__rn"
 _RANK = "__rank"
@@ -41,17 +43,19 @@ _RANK = "__rank"
 TAKE_ORDERED_MAX_K = 65_536
 
 
-def _range_partitioned(df: DataFrame, keys: list[str]) -> DataFrame:
+def _range_partitioned(
+    df: DataFrame, keys: list[str], mat: Materializer
+) -> DataFrame:
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # repartitionByRange executes its CHILD twice per action: once in the
     # range-boundary sampling pass, once in the real shuffle-map pass. The
     # children fed to the rank operators are exactly the expensive cut
     # lineages (bucket Arrow scans, salted windows, UDF-bearing expand
-    # plans), so a lazy local checkpoint in between makes the child compute
-    # once — the sampling pass materializes it and the map pass reads the
-    # cached blocks (guide §2.4 "remove shuffles/passes outright").
+    # plans), so a lazy cut in between makes the child compute once — the
+    # sampling pass materializes it and the map pass reads the cut blocks
+    # (guide §2.4 "remove shuffles/passes outright").
     return (
-        df.localCheckpoint(eager=False)
+        mat.cut(df)
         .repartitionByRange(n, *[F.col(k) for k in keys])
         .withColumn(_PID, F.spark_partition_id())
     )
@@ -65,6 +69,7 @@ def ranked_cut(
     start: int = 0,
     count_pred=None,
     max_rows: int | None = None,
+    mat: Materializer | None = None,
 ) -> tuple[DataFrame, int | None, int | None]:
     """The first ``k`` rows of ``df`` in ascending ``keys`` order (``k=None``:
     every row), with ``rank_col`` = ``start`` + 0-based global position.
@@ -87,7 +92,12 @@ def ranked_cut(
     ranks every row on the take-ordered path, and is checked there, not
     trusted: a row past the bound raises in the same job. Larger bounds take
     the range path, so the hint can never funnel a large set through one
-    partition."""
+    partition.
+
+    ``mat`` cuts the take-ordered output and both range-path stages (the
+    child before the range exchange, and its partitioned result); a local
+    Materializer by default."""
+    mat = mat or Materializer()
     order = [F.col(c).asc() for c in keys]
     cut = k if k is not None else max_rows
     if k is not None and k <= 0:
@@ -110,9 +120,9 @@ def ranked_cut(
             .withColumn(rank_col, rank.cast("long"))
             .drop(_RN)
         )
-        return ranked.localCheckpoint(eager=False), None, None
+        return mat.cut(ranked), None, None
 
-    part = _range_partitioned(df, keys).localCheckpoint(eager=False)
+    part = mat.cut(_range_partitioned(df, keys, mat))
     aggs = [F.count("*").alias("cnt")]
     if count_pred is not None:
         aggs.append(F.count_if(count_pred).alias("npred"))

@@ -36,6 +36,7 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..functions.hashing import xxh64_u64_vec
 from ..schemas import BLOOM_SHARD
+from .materialize import Materializer
 
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
@@ -179,7 +180,7 @@ def filter_new_bucketed(
     shards: DataFrame,
     n_seen_buckets: int,
     key: str = "url_hash",
-    materialize=None,
+    mat: Materializer | None = None,
 ):
     """Exact not-yet-seen filter that never scans the whole seen table.
 
@@ -196,10 +197,10 @@ def filter_new_bucketed(
     NOTHING here shuffles (both joins broadcast the small side).
 
     Returns (new_df, info) where info records the read scope for the
-    crawl_log (suspect_buckets / total_buckets / files_read)."""
-    if materialize is None:
-        materialize = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-    probed = materialize(bloom.probe(candidates, shards))
+    crawl_log (suspect_buckets / total_buckets / files_read). ``mat`` cuts
+    the probe result lazily: the suspect-bucket counts job right below
+    materializes it."""
+    probed = (mat or Materializer()).cut(bloom.probe(candidates, shards))
     certain_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
     bucket_rows = (

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import Materializer
+
 # Literal-baked assignment (planes/centroids folded into the plan as column
 # literals — zero shuffle, zero join) is the right call for the usual tiny
 # dimension tables, but the PLAN grows with n_rows × dim: past ~10^4
@@ -167,6 +169,7 @@ def ivf_topk(
     assign_path: str = "auto",
     hot_cell_cap: int | None = None,
     n_salts: int = 8,
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate all-pairs top-k: assign every vector
     to its ``nprobe`` highest-dot-product coarse cells (``centroids`` is a
@@ -306,10 +309,10 @@ def ivf_topk(
         )
     # ONE materialization of the assignment — the query side and the
     # indexed side both read it (each previously recomputed the full
-    # nlist-scoring lineage); honors the suite materialize-mode knob
+    # nlist-scoring lineage)
     from .dedup import _reuse
 
-    assigned = _reuse(assigned, spread=False)
+    assigned, _ = _reuse(assigned, mat, spread=False)
     if hot_cell_cap is None:
         a = assigned.alias("a")  # query side: probes nprobe cells
         b = assigned.filter(F.col("probe_rank") == 1).alias("b")  # top-1 indexed
@@ -391,6 +394,7 @@ def lsh_bucketed_topk(
     hot_bucket_cap: int | None = None,
     n_salts: int = 8,
     assign_path: str = "auto",
+    mat: Materializer | None = None,
 ) -> DataFrame:
     """Approximate all-pairs top-k: neighbours searched within LSH bucket only.
 
@@ -411,9 +415,8 @@ def lsh_bucketed_topk(
     # spread the (possibly single-file) corpus scan so the per-row plane
     # dots use every core, then materialize the bucketed table ONCE — the
     # hot-bucket count, the query side, and the neighbour side all read it
-    # (the r5 shape recomputed scan + bucket codes three times); honors the
-    # suite-wide set_materialize_mode knob like the dedup operators.
-    with_b = _reuse(
+    # (the r5 shape recomputed scan + bucket codes three times)
+    with_b, _ = _reuse(
         with_lsh_bucket(_spread(corpus), planes, vec_col, id_col, assign_path)
         .select(
             F.col(id_col).alias("vid"),
@@ -421,6 +424,7 @@ def lsh_bucketed_topk(
             "bucket",
         )
         .withColumn("n", _norm(F.col("v"))),
+        mat,
         spread=False,
     )
     # explicit-width repartition on the join key(s): the bucket join

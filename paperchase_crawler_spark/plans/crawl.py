@@ -64,6 +64,7 @@ from ..operators.frontier_select import (
     merged_frontier,
     select_frontier_round,
 )
+from ..operators.materialize import Materializer
 from ..operators.ordering import ranked_cut
 from ..operators.robots import blocked_expr, path_col
 from ..operators.seen import BloomSeen, filter_new, filter_new_bucketed
@@ -101,16 +102,12 @@ class CrawlRunner:
         seen_files_per_bucket: int = 8,
         checkpoint: str = "local",
     ):
-        if checkpoint not in ("local", "disk"):
-            raise ValueError("checkpoint must be 'local' or 'disk'")
-        # intra-round materialization of reused DataFrames (fetched, new
-        # rows, bloom probe): "local" = localCheckpoint — fastest, but NOT
-        # executor-loss-safe (blocks live only in executor local stores);
-        # "disk" = persist(DISK_ONLY) + materialize — survives executor loss
-        # on a real cluster at the cost of writing through the block
-        # manager. A config knob, not a source edit (r3 verdict item).
+        # intra-round lineage cuts of reused DataFrames (select, fetched,
+        # bloom probe, new rows): "local" = localCheckpoint — fastest, but
+        # NOT executor-loss-safe; "disk" = persist(DISK_ONLY), freed when
+        # the round ends (operators/materialize)
+        self.mat = Materializer(checkpoint)
         self.checkpoint = checkpoint
-        self._round_persists: list[DataFrame] = []
         self.spark = spark
         self.workdir = workdir
         self.round_budget = round_budget
@@ -152,23 +149,6 @@ class CrawlRunner:
 
     def _ckpt_path(self) -> str:
         return os.path.join(self.workdir, "CHECKPOINT")
-
-    def _materialize_lazy(self, df: DataFrame) -> DataFrame:
-        """Cut lineage on a DataFrame several commit chains will re-read.
-        Mode "local": localCheckpoint. Mode "disk": persist DISK_ONLY —
-        executor-loss-safe; the round unpersists after its checkpoint
-        commits. Neither runs a materializing job of its own: the caller's
-        immediately-following action (a metrics collect, a counts job)
-        computes every partition and thereby materializes the
-        checkpoint/persist as a side effect — one job where an eager cut
-        would pay two (guide §1.2: per-round fixed costs)."""
-        if self.checkpoint == "local":
-            return df.localCheckpoint(eager=False)
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        self._round_persists.append(out)
-        return out
 
     def _commit_checkpoint(self) -> None:
         state = {
@@ -483,7 +463,7 @@ class CrawlRunner:
         # sets take the take-ordered path, whose one job is this count; large
         # ones take the range path, whose counts job already knows the total
         ranked, n_seeds, _ = ranked_cut(
-            dedup, ["seed_idx"], "disc_seq", max_rows=len(seeds)
+            dedup, ["seed_idx"], "disc_seq", max_rows=len(seeds), mat=self.mat
         )
         if n_seeds is None:
             n_seeds = ranked.count()
@@ -509,6 +489,7 @@ class CrawlRunner:
         self.next_disc_seq = n_seeds
         self.round = 0
         self._commit_checkpoint()
+        self.mat.release()
 
     def _new_frontier_rows(self, cand: DataFrame, round_disc: int) -> DataFrame:
         """cand: (canon_url, url_hash, depth, disc_seq) → full frontier rows
@@ -549,9 +530,7 @@ class CrawlRunner:
         try:
             return self._run_round_body()
         finally:
-            for df in self._round_persists:
-                df.unpersist(blocking=False)
-            self._round_persists.clear()
+            self.mat.release()
 
     def _run_round_body(self) -> dict[str, Any]:
         import time as _time
@@ -585,7 +564,7 @@ class CrawlRunner:
         )
         ranked_df, prune_info = select_frontier_round(
             spark, self.frontier, hs, r, self.round_budget, self.max_tokens,
-            self.frontier_salts, rank_start=self.next_seq,
+            self.frontier_salts, rank_start=self.next_seq, mat=self.mat,
         )
         ranked = ranked_df.select(
             "canon_url", "url_hash", "host", "depth", "disc_seq",
@@ -621,7 +600,7 @@ class CrawlRunner:
             .mapInArrow(fetch_outlinks_map_in_arrow(), OUTLINKS_SCHEMA)
         )
         # lazy cut: the metrics collect right below is the materializing job
-        fetched = self._materialize_lazy(fetched)
+        fetched = self.mat.cut(fetched)
         # every selected row is fetched (robots-blocked rows never enqueue as
         # 'queued' — see _new_frontier_rows), so the per-partition lineage is
         # (n_fetched, n_images, n_outlinks); the round's enqueue-time blocked
@@ -679,10 +658,6 @@ class CrawlRunner:
             )
             self.corpus.append(images, meta={"round": r})
 
-        self._corpus_rows += n_images
-
-        _mark("fetch_images")
-
         # EXPAND: outlinks → canonical candidates → dedup → seen filter → gate
         raw = fetched.select(
             "seq",
@@ -713,9 +688,7 @@ class CrawlRunner:
             # Bloom suspects hash into, never the whole seen set
             new, seen_info = filter_new_bucketed(
                 spark, dedup, self.seen, self.bloom, shards, self.seen_buckets,
-                # lazy: the probe's suspect-bucket counts job (the very next
-                # action inside filter_new_bucketed) materializes the cut
-                materialize=self._materialize_lazy,
+                mat=self.mat,
             )
         else:
             new = filter_new(dedup, self.seen.read(spark))
@@ -724,7 +697,7 @@ class CrawlRunner:
         # small round ranks on the take-ordered path, with no job of its own
         new_ranked = ranked_cut(
             new, ["seq", "pos"], "disc_seq_new", start=self.next_disc_seq,
-            max_rows=n_outlinks_total,
+            max_rows=n_outlinks_total, mat=self.mat,
         )[0].select(
             "canon_url",
             "url_hash",
@@ -732,9 +705,7 @@ class CrawlRunner:
             F.col("disc_seq_new").alias("disc_seq"),
         )
         # lazy cut: the state-count agg right below is the materializing job
-        new_rows = self._materialize_lazy(
-            self._new_frontier_rows(new_ranked, round_disc=r)
-        )
+        new_rows = self.mat.cut(self._new_frontier_rows(new_ranked, round_disc=r))
         # one agg job gives both the new-row total AND the enqueue-time
         # robots-blocked split (the lineage number the crawl_log reports)
         state_counts = {
@@ -900,6 +871,7 @@ class CrawlRunner:
                 fut.result()  # re-raise the first failure BEFORE checkpoint
         self.next_seq += n_selected
         self.next_disc_seq += n_new
+        self._corpus_rows += n_images
         self._ordering_rows += n_selected
         self.round = r
         _mark("commit")

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.spark_udfs import canonicalize_udf
 from ..operators.frontier_select import compute_frontier_zones, frontier_bucket_col
+from ..operators.materialize import Materializer
 from ..operators.ordering import ranked_cut
 from ..operators.robots import blocked_expr, path_col
 from ..operators.seen import anti_join_seen
@@ -255,9 +256,9 @@ def ingest_batch(
             F.when(blocked, F.lit(-1)).otherwise(F.lit(None)).cast("int"),
         )
         .select(*FRONTIER_COLS)
-        .localCheckpoint()
     )
-    n_new = rows.count()
+    # one job both materializes the cut and counts it
+    rows, n_new = Materializer().counted(rows)
 
     if not _epoch_already_applied(frontier, epoch_id):
         staged = (

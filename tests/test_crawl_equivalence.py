@@ -230,8 +230,32 @@ def test_disk_mode_unpersists_on_midround_abort(spark, tmp_path):
     runner._new_frontier_rows = hooked
     with pytest.raises(RuntimeError, match="mid-round"):
         runner.run_round()
-    assert runner._round_persists == []  # freed by the finally, not leaked
+    assert runner.mat.owned == []  # freed by the finally, not leaked
     runner._new_frontier_rows = orig_nfr
     resumed = CrawlRunner.resume(spark, wd)
     resumed.run_round()
-    assert resumed._round_persists == []
+    assert resumed.mat.owned == []
+
+
+def test_commit_failure_keeps_corpus_counter_and_resumes(spark, tmp_path, oracle):
+    """A commit chain that fails mid-round must leave the in-memory corpus
+    counter where the last checkpoint put it (it used to be bumped before
+    the commit pool ran, overstating the corpus table), and resume() must
+    replay the round oracle-equal."""
+    wd = str(tmp_path / "cf")
+    runner = CrawlRunner(spark, wd, round_budget=BUDGET)
+    runner.init_from_seeds(SEEDS)
+    runner.run(1)
+    corpus_rows = runner._corpus_rows
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("crawl_log commit failed")
+
+    runner.crawl_log.append = fail
+    with pytest.raises(RuntimeError, match="crawl_log commit failed"):
+        runner.run_round()
+    assert runner._corpus_rows == corpus_rows
+    resumed = CrawlRunner.resume(spark, wd)
+    assert resumed.round == 1 and resumed._corpus_rows == corpus_rows
+    resumed.run(ROUNDS - 1)
+    _assert_match(resumed, oracle)

@@ -505,51 +505,41 @@ def test_dup_clusters_hot_label_salting_identical(spark):
 
 
 def test_dedup_suite_disk_mode_equivalence(spark, tmp_path):
-    """set_materialize_mode('disk') — the executor-loss-safe mode for real
-    clusters (r4 hardcoded localCheckpoint) — must produce identical results
-    across the dedup suite. With a checkpoint_dir it uses RELIABLE
-    df.checkpoint (true lineage cut — required by the iterative
-    dup_clusters, whose persist-only lineage would compound until Catalyst
-    analysis OOMs); without one the one-shot operators fall back to
-    persist(DISK_ONLY) and unpersist_materialized() frees every block."""
-    import pytest
-    from pyspark.sql import functions as F
+    """A disk Materializer — the executor-loss-safe mode for real clusters
+    (r4 hardcoded localCheckpoint) — must produce identical results across
+    the dedup suite. With a checkpoint_dir it uses RELIABLE df.checkpoint
+    (true lineage cut — required by the iterative dup_clusters, whose
+    persist-only lineage would compound until Catalyst analysis OOMs);
+    without one the one-shot operators fall back to persist(DISK_ONLY) and
+    release() frees every block."""
+    from paperchase_crawler_spark.operators.materialize import Materializer
 
     docs = _docs(spark)
     chain = spark.range(0, 40).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
     )
-    local = {
-        "mh": _rows(D.minhash_lsh_pairs(docs, "text", "doc_id", 3, 8, 4)),
-        "sh": _rows(D.simhash_pairs(docs, "text", "doc_id", max_hamming=3)),
-        "cl": _rows(D.dup_clusters(chain)),
-    }
-    # persist fallback first (no checkpoint dir anywhere yet): non-iterative
-    # ops exact, blocks freed on demand; the iterative op refuses loudly
-    assert spark.sparkContext.getCheckpointDir() is None
-    D.set_materialize_mode("disk")
-    try:
-        got = _rows(D.minhash_lsh_pairs(docs, "text", "doc_id", 3, 8, 4))
-        assert got == local["mh"]
-        assert D.unpersist_materialized(blocking=True) > 0
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            D.dup_clusters(chain)
-    finally:
-        D.set_materialize_mode("local")
-        D.unpersist_materialized()
-    # reliable-checkpoint path: the whole suite, iterative op included
-    D.set_materialize_mode("disk", checkpoint_dir=str(tmp_path / "ckpt"))
-    try:
-        disk = {
-            "mh": _rows(D.minhash_lsh_pairs(docs, "text", "doc_id", 3, 8, 4)),
-            "sh": _rows(D.simhash_pairs(docs, "text", "doc_id", max_hamming=3)),
-            "cl": _rows(D.dup_clusters(chain)),
+
+    def suite(mat=None):
+        return {
+            "mh": _rows(D.minhash_lsh_pairs(docs, "text", "doc_id", 3, 8, 4, mat=mat)),
+            "sh": _rows(D.simhash_pairs(docs, "text", "doc_id", max_hamming=3, mat=mat)),
+            "cl": _rows(D.dup_clusters(chain, mat=mat)),
         }
-        assert disk == local
-    finally:
-        D.set_materialize_mode("local")
+
+    local = suite()
+    # persist fallback: non-iterative ops exact, blocks freed on release;
+    # the iterative op refuses loudly
+    with Materializer("disk") as mat:
+        got = _rows(D.minhash_lsh_pairs(docs, "text", "doc_id", 3, 8, 4, mat=mat))
+        assert got == local["mh"]
+        assert mat.release(blocking=True) > 0
+        with pytest.raises(ValueError, match="checkpoint dir"):
+            D.dup_clusters(chain, mat=mat)
+    # reliable-checkpoint path: the whole suite, iterative op included
+    mat = Materializer("disk", checkpoint_dir=str(tmp_path / "ckpt"))
+    assert suite(mat) == local and mat.owned == []
     with pytest.raises(ValueError, match="'local' or 'disk'"):
-        D.set_materialize_mode("memory")
+        Materializer("memory")
 
 
 def test_auto_n_blocks_scales_with_corpus():

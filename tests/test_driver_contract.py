@@ -70,3 +70,38 @@ def test_registry_consistency():
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
     assert set(osql) <= set(qs)
     assert len(qs) >= 25
+
+
+def test_minhash_sub_k_docs_emit_no_pair_like_sql_twin(spark):
+    """Documents shorter than k=3 words have no shingles, hence a NULL
+    signature, and NULL never equals NULL in the band equi-join: even two
+    identical short texts form no pair. The DuckDB twin agrees, so the old
+    string-bucket form (which put every sub-k doc in one empty-string
+    bucket) cannot come back silently."""
+    import pandas as pd
+
+    from paperchase_crawler_spark.operators.dedup import minhash_lsh_pairs
+    from paperchase_crawler_spark.plans.driver_queries import SQL_MINHASH
+
+    long_text = "the quick brown fox jumps over the lazy dog today"
+    rows = [
+        (1, long_text),
+        (2, long_text),
+        (3, long_text + " again"),
+        (4, "alpha beta"),
+        (5, "alpha beta"),
+        (6, "solo"),
+        (7, ""),
+    ]
+    got = sorted(
+        tuple(r)
+        for r in minhash_lsh_pairs(
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            "text", "doc_id", k=3, n_hashes=8, bands=4,
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(tuple(r) for r in con.execute(SQL_MINHASH).fetchall())
+    assert got == want
+    assert (1, 2) in got and not {4, 5, 6, 7} & {d for pair in got for d in pair}

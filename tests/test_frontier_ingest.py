@@ -128,6 +128,29 @@ def test_ingest_epoch_replay_is_idempotent(spark, tmp_path):
     assert merged_frontier(spark, frontier).count() == 3
 
 
+def test_ingest_batch_job_count(spark, tmp_path):
+    """Spark jobs per ingested micro-batch, a fixed cost of every epoch.
+    The frontier rows' lineage cut and their count share one job (an eager
+    localCheckpoint followed by count() ran one more)."""
+    frontier, seen = _init_tables(spark, str(tmp_path))
+    batch = spark.createDataFrame(
+        [("https://h7.example/a", 1), ("https://h8.example/b", 2),
+         ("https://h0.example/", 3)],
+        "raw_url string, src_seq long",
+    )
+    sc = spark.sparkContext
+    group = "ingest_batch jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = ingest_batch(spark, batch, frontier, seen, 0, n_buckets=NB, seen_buckets=SB)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out["n_new"] == 2
+    assert n_jobs == 14  # the eager localCheckpoint + count() form ran 15
+
+
 def test_ingest_crash_between_commits_recovers(spark, tmp_path):
     """Simulated crash AFTER the frontier commit but BEFORE the seen commit:
     the replayed epoch must skip the frontier and complete only the seen

@@ -246,31 +246,36 @@ def test_word_kgrams_unrolled_matches_slice_form(spark):
         assert got == want, k
 
 
-def test_materialize_mode_context_restores_and_unpersists(spark, tmp_path):
-    """The context manager must restore the previous mode and free every
-    disk-mode persist it created, success or error (ADVICE r5 leak)."""
+def test_materializer_releases_owned_persists(spark, tmp_path):
+    """A disk Materializer without a checkpoint dir owns its
+    persist(DISK_ONLY) cuts and frees every one on context exit, on success
+    and on error (ADVICE r5 leak). With a dir it writes reliable checkpoint
+    files and owns nothing, whatever dir the SparkContext held before; the
+    local mode owns nothing either. An invalid mode raises."""
     import pytest
 
-    assert D._MATERIALIZE_MODE == "local"
+    from paperchase_crawler_spark.operators.materialize import Materializer
+
     df = spark.createDataFrame([(i,) for i in range(10)], "x long")
-    # a session-level reliable checkpoint dir (set by earlier tests) makes
-    # disk mode take the df.checkpoint branch — the persist-leak guard only
-    # has something to clean on the persist(DISK_ONLY) fallback
-    persist_path = spark.sparkContext.getCheckpointDir() is None
-    with D.materialize_mode("disk"):
-        assert D._MATERIALIZE_MODE == "disk"
-        m = D._materialize(df)
-        if persist_path:
-            assert m.storageLevel.useDisk and len(D._PERSISTED) == 1
-        assert m._pc_rows == 10
-    assert D._MATERIALIZE_MODE == "local" and len(D._PERSISTED) == 0
-    if persist_path:
-        assert m.storageLevel.useDisk is False  # unpersisted on exit
-    with pytest.raises(RuntimeError):
-        with D.materialize_mode("disk"):
-            D._materialize(df)
+    with Materializer("disk") as mat:
+        m, n = mat.counted(df)
+        assert n == 10 and m.storageLevel.useDisk and mat.owned == [m]
+    assert mat.owned == [] and m.storageLevel.useDisk is False
+    with pytest.raises(RuntimeError, match="boom"):
+        with Materializer("disk") as mat:
+            m, _ = mat.counted(df)
             raise RuntimeError("boom")
-    assert D._MATERIALIZE_MODE == "local" and len(D._PERSISTED) == 0
+    assert mat.owned == [] and m.storageLevel.useDisk is False
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "other"))
+    ckpt = tmp_path / "ckpt"
+    reliable = Materializer("disk", str(ckpt))
+    m, n = reliable.counted(df)
+    assert n == 10 and reliable.owned == [] and any(ckpt.iterdir())
+    local = Materializer()
+    m, n = local.counted(df)
+    assert n == 10 and local.owned == []
+    with pytest.raises(ValueError, match="'local' or 'disk'"):
+        Materializer("memory")
 
 
 def test_auto_n_blocks_warns_past_banding_horizon():
@@ -356,13 +361,34 @@ def test_outlinks_batch_arrow_matches_scalar(spark):
 
 
 def test_hamming_reuses_materialized_count(spark):
-    """auto_n_blocks must read the _pc_rows stamp from the materialization
-    instead of launching its own count job (r5 verdict What's-wrong #2)."""
-    df = spark.createDataFrame(
-        [(i, i * 7919) for i in range(100)], "doc_id long, h long"
+    """auto_n_blocks must read the row count of the job that materializes
+    the simhash table instead of launching its own count job (r5 verdict
+    What's-wrong #2): building simhash_pairs runs exactly the jobs of that
+    one cut-and-count."""
+    from paperchase_crawler_spark.operators.materialize import Materializer
+
+    docs = _docs(spark)
+    sc = spark.sparkContext
+
+    def jobs(name, build):
+        sc.setJobGroup(name, name)
+        try:
+            out = build()
+            return out, len(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    (_, n_rows), cut_jobs = jobs(
+        "simhash table cut",
+        lambda: Materializer().counted(
+            D.simhash64(D._spread(docs), "text", "doc_id")
+        ),
     )
-    m = D._reuse(D._spread(df))
-    assert getattr(m, "_pc_rows", None) == 100
-    # reused path keeps the stamp through the projection
-    out = D.hamming_dup_pairs(m, "h", "doc_id", bits=60, max_hamming=3, reused=True)
-    out.collect()  # plan builds + runs without an extra count
+    pairs, build_jobs = jobs(
+        "simhash_pairs build",
+        lambda: D.simhash_pairs(docs, "text", "doc_id", max_hamming=3),
+    )
+    assert n_rows > 0 and cut_jobs >= 1
+    assert build_jobs == cut_jobs
+    assert pairs.count() > 0
