@@ -67,6 +67,29 @@ def frontier_bucket_col(nb: int, salts: int = 1) -> Column:
     ).cast("int")
 
 
+def _bucket_rows(tbl: IceTable, buckets: list[str] | None = None) -> list:
+    """(bucket, files) manifest rows in bucket order; ``buckets`` scopes
+    which manifests are opened (IceTable.bucket_plan)."""
+    plan = tbl.bucket_plan(buckets=buckets)
+    return [
+        (int(b), plan[b]["base"] + plan[b]["delta"]) for b in sorted(plan, key=int)
+    ]
+
+
+def _last_wins(tbl):
+    """Arrow: the latest version (max ``__rev``) of every url_hash."""
+    import numpy as np
+    import pyarrow as pa
+
+    uh = tbl.column("url_hash").to_numpy()
+    order = np.lexsort((tbl.column("__rev").to_numpy(), uh))
+    uh_sorted = uh[order]
+    last = np.ones(len(order), dtype=bool)
+    if len(order) > 1:
+        last[:-1] = uh_sorted[1:] != uh_sorted[:-1]
+    return tbl.take(pa.array(order[last]))
+
+
 def _merge_topk_fn(max_tokens: int, tau: tuple | None = None):
     """Arrow kernel: read this task's bucket files with pyarrow, last-wins
     merge by url_hash → queued filter → per-host top-max_tokens by
@@ -119,14 +142,7 @@ def _merge_topk_fn(max_tokens: int, tau: tuple | None = None):
             ).combine_chunks()
         if tbl.num_rows == 0:
             return
-        uh = tbl.column("url_hash").to_numpy()
-        rev = tbl.column("__rev").to_numpy()
-        order = np.lexsort((rev, uh))
-        uh_sorted = uh[order]
-        last = np.ones(len(order), dtype=bool)
-        if len(order) > 1:
-            last[:-1] = uh_sorted[1:] != uh_sorted[:-1]
-        merged = tbl.take(pa.array(order[last]))
+        merged = _last_wins(tbl)
         merged = merged.filter(pc.equal(merged.column("state"), "queued"))
         if merged.num_rows == 0:
             return
@@ -176,11 +192,7 @@ def select_candidates(
     """Per-host top-``max_tokens`` queued candidates with per-(host, salt)
     rank ``__host_rank`` — one Arrow task per bucket reading only its own
     files; the only thing that moves is the NB-row file manifest."""
-    plan = tbl.bucket_plan()
-    rows = [
-        (int(b), plan[b]["base"] + plan[b]["delta"]) for b in sorted(plan, key=int)
-    ]
-    return _scan_manifest(spark, rows, max_tokens)
+    return _scan_manifest(spark, _bucket_rows(tbl), max_tokens)
 
 
 # -- zone-map pruned SELECT ----------------------------------------------------
@@ -437,31 +449,21 @@ def select_candidates_pruned(
     tau is None when the result is exact with no verification needed, else
     the caller MUST verify ≥ budget post-cut survivors have key < tau and
     fall back to ``select_candidates`` otherwise (see select_frontier_round)."""
-    pr = _pruned_bucket_plan(
-        tbl.bucket_summaries(), budget, max_tokens, overscan, max_scan_frac
-    )
+    summaries = tbl.bucket_summaries()
+    pr = _pruned_bucket_plan(summaries, budget, max_tokens, overscan, max_scan_frac)
     if pr is None:
-        plan = tbl.bucket_plan()
-        rows = [
-            (int(b), plan[b]["base"] + plan[b]["delta"])
-            for b in sorted(plan, key=int)
-        ]
+        n = len(summaries)
         info = {
-            "scanned_buckets": len(rows),
-            "queued_buckets": len(rows),
-            "total_buckets": len(rows),
+            "scanned_buckets": n,
+            "queued_buckets": n,
+            "total_buckets": n,
             "tau": None,
             "pruned": False,
         }
-        return _scan_manifest(spark, rows, max_tokens), None, info
+        return select_candidates(spark, tbl, max_tokens), None, info
     keys, tau, info = pr
     # only the chosen buckets' manifests are opened
-    plan = tbl.bucket_plan(buckets=keys)
-    rows = [
-        (int(b), plan[b]["base"] + plan[b]["delta"])
-        for b in sorted(plan, key=int)
-    ]
-    return _scan_manifest(spark, rows, max_tokens, tau), tau, info
+    return _scan_manifest(spark, _bucket_rows(tbl, keys), max_tokens, tau), tau, info
 
 
 def select_frontier_round(
@@ -475,7 +477,6 @@ def select_frontier_round(
     rank_start: int = 0,
     prune_overscan: float = 3.0,
     max_scan_frac: float = 0.75,
-    broadcast_hosts: bool = True,
     mat: Materializer | None = None,
 ):
     """The production SELECT stage, shared by the crawl loop and the bench:
@@ -483,17 +484,12 @@ def select_frontier_round(
     exact per-host token cut → fused exact global budget cut + rank. The
     pruned path is verified exact (see module notes); when the verification
     count falls short the stage transparently re-runs on the full scan.
-    Returns (ranked_df, info).
-
-    ``broadcast_hosts``: the host dimension is broadcast by default (right
-    for ≲10^7 hosts). At the extreme design point (10^8 hosts, multi-GB
-    dimension) pass False — the eligibility join then shuffles on host,
-    which is O(candidates + hosts), still never O(frontier). ``mat`` cuts
-    the ranked output (ordering.ranked_cut)."""
+    Returns (ranked_df, info). The host dimension is always broadcast.
+    ``mat`` cuts the ranked output (ordering.ranked_cut)."""
     from .ordering import ranked_cut
     from .politeness import R3_KEYS, eligible_hosts
 
-    hs = F.broadcast(host_state_df) if broadcast_hosts else host_state_df
+    hs = F.broadcast(host_state_df)
 
     def _ranked(cand: DataFrame, below=None):
         elig = eligible_hosts(cand.join(hs, on="host", how="inner"), round_no)
@@ -568,14 +564,7 @@ def _merge_buckets_fn(next_rev: int):
                     [pq.read_table(f).select(names) for f in files],
                     promote_options="permissive",
                 ).combine_chunks()
-                uh = tbl.column("url_hash").to_numpy()
-                rev = tbl.column("__rev").to_numpy()
-                order = np.lexsort((rev, uh))
-                uh_sorted = uh[order]
-                last = np.ones(len(order), dtype=bool)
-                if len(order) > 1:
-                    last[:-1] = uh_sorted[1:] != uh_sorted[:-1]
-                merged = tbl.take(pa.array(order[last])).select(base_names)
+                merged = _last_wins(tbl).select(base_names)
                 # write back sorted by the priority key: row groups then carry
                 # tight (depth, disc_seq) stats, so the pruned SELECT's
                 # parquet predicate pushdown skips cold groups without IO
@@ -617,9 +606,7 @@ def compacted_frontier(
     shuffle-free — feed straight to overwrite_bucketed for compaction.
     ``buckets`` scopes the merge to a subset (partial compaction via
     overwrite_buckets_partial: cold buckets are neither read nor rewritten)."""
-    plan = tbl.bucket_plan(buckets=buckets)
-    keys = sorted(plan, key=int)
-    rows = [(int(b), plan[b]["base"] + plan[b]["delta"]) for b in keys]
+    rows = _bucket_rows(tbl, buckets)
     if not rows:
         return spark.createDataFrame([], _COMPACT_SCHEMA)
     manifest = spark.createDataFrame(

@@ -6,7 +6,7 @@ Each round is a Catalyst-planned batch job over snapshot-versioned tables:
           per-host top-k (NO shuffle: operators/frontier_select) →
           ⋈ broadcast(host_state) eligibility + exact tokens cut →
           exact global budget cut (no single-partition sort)
-  FETCH   mapInPandas over Arrow batches (simweb: outlinks + image decode)
+  FETCH   mapInArrow over Arrow batches (simweb: outlinks + image decode)
   EXPAND  posexplode(outlinks) → canonicalize (vectorized pandas UDF) →
           xxhash64 → first-discovery dedup (min struct) → seen anti-join
           (optionally Bloom-accelerated) → robots gate (JVM HOFs) → new rows
@@ -88,7 +88,6 @@ class CrawlRunner:
         spark: SparkSession,
         workdir: str,
         round_budget: int,
-        n_salts: int = 8,
         bloom: BloomSeen | None = None,
         with_bytes: bool = True,
         frontier_buckets: int = 16,
@@ -111,7 +110,6 @@ class CrawlRunner:
         self.spark = spark
         self.workdir = workdir
         self.round_budget = round_budget
-        self.n_salts = n_salts
         self.bloom = bloom
         self.with_bytes = with_bytes
         # frontier MoR layout: host-hash buckets × url-hash salts; max_tokens
@@ -168,7 +166,6 @@ class CrawlRunner:
                 "bloom_shards": self.bloom_shards.current_snapshot_id(),
             },
             "round_budget": self.round_budget,
-            "n_salts": self.n_salts,
             "frontier_buckets": self.frontier_buckets,
             "frontier_salts": self.frontier_salts,
             "max_tokens": self.max_tokens,
@@ -208,7 +205,6 @@ class CrawlRunner:
             spark,
             workdir,
             round_budget=state["round_budget"],
-            n_salts=state["n_salts"],
             bloom=bloom,
             with_bytes=state["with_bytes"],
             frontier_buckets=state["frontier_buckets"],
@@ -282,13 +278,31 @@ class CrawlRunner:
         )
 
     def _frontier_disc_hwm(self) -> int:
-        """disc_seq high-water mark from frontier snapshot metadata — the
-        composition point with streaming ingestion (frontier_ingest bumps it
-        out-of-band between rounds; shared lookup so both sides see the same
-        counter even when compaction commits interleave)."""
-        from ..streaming.frontier_ingest import frontier_disc_hwm
+        """disc_seq high-water mark: the newest frontier snapshot whose meta
+        carries ``next_disc_seq`` (maintenance commits may not). The
+        composition point with streaming ingestion, which bumps it
+        out-of-band between rounds."""
+        for sid in reversed(self.frontier.snapshot_ids()):
+            meta = self.frontier.snapshot(sid)["meta"]
+            if "next_disc_seq" in meta:
+                return int(meta["next_disc_seq"])
+        return 0
 
-        return frontier_disc_hwm(self.frontier)
+    def _guard_disc_hwm(self, hwm_at_start: int) -> None:
+        """Fail stop if an ingest epoch moved the disc_seq high-water mark
+        since the round claimed its block: overlapping disc_seqs would break
+        the global uniqueness R3/R4 ordering and the zone-pruning key proof
+        rely on. Check-then-act — crash-loud detection of a violated
+        composition contract, not a lock."""
+        hwm = self._frontier_disc_hwm()
+        if hwm > hwm_at_start:
+            raise RuntimeError(
+                f"concurrent ingest advanced the disc_seq high-water mark "
+                f"mid-round ({hwm_at_start} → {hwm}); co-executing ingest "
+                "with a live round is unsupported — run ingest between rounds "
+                "(availableNow). resume() rolls this round back and replays "
+                "it safely."
+            )
 
     def _frontier_overwrite(self, df: DataFrame, meta: dict | None = None) -> None:
         self.frontier.overwrite_bucketed(
@@ -491,6 +505,19 @@ class CrawlRunner:
         self._commit_checkpoint()
         self.mat.release()
 
+    def _unseen(self, cand: DataFrame) -> tuple[DataFrame, dict]:
+        """cand rows whose url_hash is not in seen → (new, info for the
+        crawl_log). Shared by EXPAND and streaming ingest."""
+        if self.bloom is None or self.bloom_shards.current_snapshot_id() is None:
+            seen = self.spark.read.schema("url_hash long").parquet(*self.seen.files_at())
+            return filter_new(cand, seen), {"path": "exact_full_scan"}
+        # bucket-pruned exact verify: reads only the seen buckets the Bloom
+        # suspects hash into, never the whole seen set
+        return filter_new_bucketed(
+            self.spark, cand, self.seen, self.bloom,
+            self.bloom_shards.read(self.spark), self.seen_buckets, mat=self.mat,
+        )
+
     def _new_frontier_rows(self, cand: DataFrame, round_disc: int) -> DataFrame:
         """cand: (canon_url, url_hash, depth, disc_seq) → full frontier rows
         with host extraction + robots gating at enqueue (R6)."""
@@ -678,21 +705,7 @@ class CrawlRunner:
                 "s.canon_url",
             )
         )
-        shards = (
-            self.bloom_shards.read(spark)
-            if self.bloom is not None and self.bloom_shards.current_snapshot_id() is not None
-            else None
-        )
-        if shards is not None:
-            # bucket-pruned exact verify: reads only the seen buckets the
-            # Bloom suspects hash into, never the whole seen set
-            new, seen_info = filter_new_bucketed(
-                spark, dedup, self.seen, self.bloom, shards, self.seen_buckets,
-                mat=self.mat,
-            )
-        else:
-            new = filter_new(dedup, self.seen.read(spark))
-            seen_info = {"path": "exact_full_scan"}
+        new, seen_info = self._unseen(dedup)
         # the collected outlink total upper-bounds the new-row count, so a
         # small round ranks on the take-ordered path, with no job of its own
         new_ranked = ranked_cut(
@@ -795,19 +808,8 @@ class CrawlRunner:
             # table commit): the guard is check-then-act, so this narrows —
             # but does not close — the race window against an ingest epoch
             # landing between the check and the append. Closing it would need
-            # a commit-time CAS on next_disc_seq; co-executing a
-            # processingTime ingest with a live round is unsupported (the
-            # module contract says BETWEEN rounds), so the guard is
-            # best-effort crash-loud detection, not a concurrency primitive.
-            hwm = self._frontier_disc_hwm()
-            if hwm > hwm_at_start:
-                raise RuntimeError(
-                    f"concurrent ingest advanced the disc_seq high-water mark "
-                    f"mid-round ({hwm_at_start} → {hwm}) at frontier-commit "
-                    "time; co-executing ingest with a live round is "
-                    "unsupported — run ingest between rounds (availableNow). "
-                    "resume() rolls this round back and replays it safely."
-                )
+            # a commit-time CAS on next_disc_seq.
+            self._guard_disc_hwm(hwm_at_start)
             updated = (
                 fetched.select(
                     "canon_url", "url_hash", "host", "depth", "disc_seq",
@@ -830,29 +832,13 @@ class CrawlRunner:
 
         # disc_seq uniqueness guard: the round claimed [next_disc_seq,
         # next_disc_seq + n_new) when it started from the published
-        # high-water mark. A concurrent ingest epoch landing MID-round (a
-        # processingTime stream, which this engine does not support
-        # co-executing with a live round) would have allocated from the same
-        # mark — overlapping disc_seqs would break the global uniqueness the
-        # R3/R4 ordering and the zone-pruning key proof rely on. Detect the
-        # moved mark BEFORE any disc_seq-bearing table commits and fail stop:
-        # the round's ordering/corpus appends (no disc_seqs) are
-        # post-checkpoint garbage that CrawlRunner.resume() rolls back, so
-        # the round replays cleanly after the ingest quiesces. This check —
-        # and the re-check inside _commit_frontier right before the append —
-        # is check-then-act: it shrinks the race window to microseconds but
-        # cannot close it without a commit-time CAS; it is crash-loud
-        # detection for a violated composition contract, not a lock.
-        hwm_now = self._frontier_disc_hwm()
-        if hwm_now > hwm_at_start:
-            raise RuntimeError(
-                f"concurrent ingest advanced the disc_seq high-water mark "
-                f"mid-round ({hwm_at_start} → {hwm_now}); co-executing a "
-                "processingTime ingest stream with a live round is "
-                "unsupported — run ingest between rounds (availableNow). "
-                "No disc_seq-bearing table was committed; resume() replays "
-                "this round safely."
-            )
+        # high-water mark; a concurrent ingest epoch landing MID-round would
+        # have allocated from the same mark. Detect the moved mark BEFORE
+        # any disc_seq-bearing table commits and fail stop: the round's
+        # ordering/corpus appends (no disc_seqs) are post-checkpoint garbage
+        # that CrawlRunner.resume() rolls back, so the round replays cleanly
+        # after the ingest quiesces.
+        self._guard_disc_hwm(hwm_at_start)
 
         from concurrent.futures import ThreadPoolExecutor
 

@@ -210,20 +210,19 @@ def test_disk_mode_unpersists_on_midround_abort(spark, tmp_path):
     # inject the concurrent ingest at a point that still PRECEDES the HWM
     # guard: _new_frontier_rows runs in EXPAND, before the pre-pool check
     # (r6 moved ordering.append — the old hook point — into the concurrent
-    # commit pool, after the guard)
+    # commit pool, after the guard). The feed runs on its own handle:
+    # ingest enqueues through _new_frontier_rows too, so on the hooked
+    # runner it would recurse.
+    feed = CrawlRunner.resume(spark, wd)
     orig_nfr = runner._new_frontier_rows
 
     def hooked(cand, round_disc):
         ingest_batch(
-            spark,
+            feed,
             spark.createDataFrame(
                 [("https://host0.example/mid", 1)], "raw_url string, src_seq long"
             ),
-            runner.frontier, runner.seen, epoch_id=21,
-            n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-            robots_rules_df=runner.host_state.read(spark).select(
-                "host", "robots_rules"
-            ),
+            epoch_id=21,
         )
         return orig_nfr(cand, round_disc)
 

@@ -2,59 +2,47 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
+from paperchase_crawler_spark import simweb
 from paperchase_crawler_spark.operators.frontier_select import (
-    compute_frontier_zones,
     frontier_bucket_col,
     merged_frontier,
     select_frontier_round,
 )
-from paperchase_crawler_spark.schemas import FRONTIER
-from paperchase_crawler_spark.sources.icetable import IceTable
+from paperchase_crawler_spark.plans.crawl import CrawlRunner
 from paperchase_crawler_spark.streaming.frontier_ingest import (
     ingest_batch,
     run_ingest_stream,
 )
 
 NB, SB = 4, 8
+# seed hosts outside the simweb universe: no robots rules, never blocked
+SEEDS = ["https://h0.example/", "https://h1.example/"]
 
 
-def _init_tables(spark, base):
-    """Frontier with 2 seed rows (disc_seq 0,1) + matching seen set."""
-    frontier = IceTable(os.path.join(base, "frontier"))
-    seen = IceTable(os.path.join(base, "seen"))
-    seeds = ["https://h0.example/", "https://h1.example/"]
-    rows = [
-        (u, 0, f"h{i}.example", 0, i, 0.0, "queued", 0, None)
-        for i, u in enumerate(seeds)
-    ]
-    df = spark.createDataFrame(rows, FRONTIER).withColumn(
-        "url_hash", F.xxhash64("canon_url")
-    ).select(*[f.name for f in FRONTIER.fields])
-    staged = (
-        df.withColumn("__rev", F.lit(0).cast("int"))
-        .withColumn("__fb", frontier_bucket_col(NB, 1))
-        .repartition(NB, F.col("__fb"))
+def _seeded_runner(spark, base):
+    """A crawl runner at round 0: the 2 seeds hold disc_seq 0 and 1."""
+    runner = CrawlRunner(
+        spark, str(base), round_budget=50, with_bytes=False,
+        frontier_buckets=NB, seen_buckets=SB,
     )
-    frontier.overwrite_bucketed(
-        staged, n_buckets=NB,
-        meta={"next_disc_seq": 2},
-        zone_fn=lambda files: compute_frontier_zones(spark, files),
-    )
-    seen.overwrite_bucketed(
-        df.select("url_hash")
-        .withColumn("__fb", F.pmod(F.col("url_hash"), F.lit(SB)).cast("int"))
-        .repartition(SB, F.col("__fb")),
-        n_buckets=SB,
-    )
-    return frontier, seen
+    runner.init_from_seeds(SEEDS)
+    return runner
+
+
+def _blocked_url() -> str:
+    """A simweb URL its host's robots rules disallow."""
+    for h in simweb.host_state_rows(last_round=0):
+        for rule in h["robots_rules"]:
+            if not rule["allow"]:
+                return f"https://{h['host']}{rule['prefix']}x"
+    raise AssertionError("simweb has no disallow rule")
 
 
 def test_stream_ingest_end_to_end(spark, tmp_path):
-    frontier, seen = _init_tables(spark, str(tmp_path))
+    runner = _seeded_runner(spark, tmp_path / "crawl")
+    n_seeds = len(SEEDS)
     src_dir = str(tmp_path / "src")
     # file 1: a new URL, a duplicate-of-seed (must drop), an in-batch dup
     spark.createDataFrame(
@@ -78,12 +66,9 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir + "/f*")
     )
-    results = run_ingest_stream(
-        spark, source, frontier, seen, str(tmp_path / "ckpt"),
-        n_buckets=NB, seen_buckets=SB,
-    )
+    results = run_ingest_stream(runner, source, str(tmp_path / "ckpt"))
     assert sum(r["n_new"] for r in results) == 3  # /a, /b, /c
-    merged = merged_frontier(spark, frontier)
+    merged = merged_frontier(spark, runner.frontier)
     got = {
         r["canon_url"]: r["disc_seq"]
         for r in merged.filter(F.col("round_disc") == -1).collect()
@@ -92,15 +77,15 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
         "https://h2.example/a", "https://h3.example/b", "https://h4.example/c",
     }
     # contiguous disc_seq continuing after the seeds' high-water mark
-    assert sorted(got.values()) == [2, 3, 4]
-    assert frontier.snapshot()["meta"]["next_disc_seq"] == 5
+    assert sorted(got.values()) == [n_seeds, n_seeds + 1, n_seeds + 2]
+    assert runner.frontier.snapshot()["meta"]["next_disc_seq"] == n_seeds + 3
     # seen covers everything now; re-ingesting the same URLs adds nothing
     res2 = ingest_batch(
-        spark,
+        runner,
         spark.createDataFrame(
             [("https://h3.example/b", 300)], "raw_url string, src_seq long"
         ),
-        frontier, seen, epoch_id=99, n_buckets=NB, seen_buckets=SB,
+        epoch_id=99,
     )
     assert res2["n_new"] == 0
     # and the BSP SELECT immediately sees the ingested URLs
@@ -109,30 +94,32 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
         "host string, crawl_delay_rounds int, tokens_per_round int, last_round int",
     )
     ranked, _ = select_frontier_round(
-        spark, frontier, hs, round_no=1, budget=10, max_tokens=8, salts=1
+        spark, runner.frontier, hs, round_no=1, budget=10, max_tokens=8, salts=1
     )
     assert {r["canon_url"] for r in ranked.collect()} >= set(got)
 
 
 def test_ingest_epoch_replay_is_idempotent(spark, tmp_path):
-    frontier, seen = _init_tables(spark, str(tmp_path))
+    runner = _seeded_runner(spark, tmp_path / "crawl")
+    frontier, seen = runner.frontier, runner.seen
     batch = spark.createDataFrame(
         [("https://h9.example/x", 1)], "raw_url string, src_seq long"
     )
-    r1 = ingest_batch(spark, batch, frontier, seen, 7, n_buckets=NB, seen_buckets=SB)
+    r1 = ingest_batch(runner, batch, 7)
     f_snap, s_snap = frontier.current_snapshot_id(), seen.current_snapshot_id()
-    r2 = ingest_batch(spark, batch, frontier, seen, 7, n_buckets=NB, seen_buckets=SB)
+    r2 = ingest_batch(runner, batch, 7)
     assert r1["n_new"] == 1 and r2["replayed"] is True
     assert frontier.current_snapshot_id() == f_snap  # no second commit
     assert seen.current_snapshot_id() == s_snap
-    assert merged_frontier(spark, frontier).count() == 3
+    assert merged_frontier(spark, frontier).count() == len(SEEDS) + 1
 
 
 def test_ingest_batch_job_count(spark, tmp_path):
-    """Spark jobs per ingested micro-batch, a fixed cost of every epoch.
-    The frontier rows' lineage cut and their count share one job (an eager
-    localCheckpoint followed by count() ran one more)."""
-    frontier, seen = _init_tables(spark, str(tmp_path))
+    """Spark jobs per ingested micro-batch, a fixed cost of every epoch,
+    robots gate included. The frontier rows' lineage cut and their count
+    share one job, and the exact seen filter reads seen with its known
+    schema (no inference job)."""
+    runner = _seeded_runner(spark, tmp_path / "crawl")
     batch = spark.createDataFrame(
         [("https://h7.example/a", 1), ("https://h8.example/b", 2),
          ("https://h0.example/", 3)],
@@ -142,32 +129,57 @@ def test_ingest_batch_job_count(spark, tmp_path):
     group = "ingest_batch jobs"
     sc.setJobGroup(group, group)
     try:
-        out = ingest_batch(spark, batch, frontier, seen, 0, n_buckets=NB, seen_buckets=SB)
+        out = ingest_batch(runner, batch, 0)
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert out["n_new"] == 2
-    assert n_jobs == 14  # the eager localCheckpoint + count() form ran 15
+    # the standalone-table ingest with a separately built robots_rules_df
+    # ran 15 on this workdir, 16 with the rules read inside the call
+    assert n_jobs == 15
+
+
+def test_ingest_refuses_runner_layout_mismatch(spark, tmp_path):
+    """A handle whose layout differs from the crawl's checkpoint (here a
+    hand-built one with another bucket count) would write rows into buckets
+    the crawl does not read them from: ingest refuses before any commit."""
+    import pytest
+
+    runner = _seeded_runner(spark, tmp_path / "crawl")
+    f_snap = runner.frontier.current_snapshot_id()
+    other = CrawlRunner(
+        spark, str(tmp_path / "crawl"), round_budget=50, with_bytes=False,
+        frontier_buckets=2 * NB, seen_buckets=SB,
+    )
+    batch = spark.createDataFrame(
+        [("https://h9.example/x", 1)], "raw_url string, src_seq long"
+    )
+    with pytest.raises(ValueError, match="layout"):
+        ingest_batch(other, batch, 1)
+    assert runner.frontier.current_snapshot_id() == f_snap
+    assert ingest_batch(runner, batch, 1)["n_new"] == 1
 
 
 def test_ingest_crash_between_commits_recovers(spark, tmp_path):
     """Simulated crash AFTER the frontier commit but BEFORE the seen commit:
     the replayed epoch must skip the frontier and complete only the seen
     append — no duplicate frontier rows, seen catches up."""
-    frontier, seen = _init_tables(spark, str(tmp_path))
+    runner = _seeded_runner(spark, tmp_path / "crawl")
+    frontier, seen = runner.frontier, runner.seen
     batch = spark.createDataFrame(
         [("https://h9.example/x", 1)], "raw_url string, src_seq long"
     )
     # run the full epoch once, then surgically roll the SEEN table back to
     # pre-epoch state — byte-identical to a crash between the two commits
-    ingest_batch(spark, batch, frontier, seen, 7, n_buckets=NB, seen_buckets=SB)
-    seen.rollback(seen.snapshot_ids()[0])
+    seen_pre = seen.current_snapshot_id()
+    ingest_batch(runner, batch, 7)
+    seen.rollback(seen_pre)
     f_snap = frontier.current_snapshot_id()
-    r = ingest_batch(spark, batch, frontier, seen, 7, n_buckets=NB, seen_buckets=SB)
+    r = ingest_batch(runner, batch, 7)
     assert r["replayed"] is False and r["n_new"] == 1
     assert frontier.current_snapshot_id() == f_snap  # frontier NOT re-applied
-    assert merged_frontier(spark, frontier).count() == 3  # no dup rows
+    assert merged_frontier(spark, frontier).count() == len(SEEDS) + 1  # no dup rows
     # seen now contains the ingested key exactly once
     k = seen.read(spark).filter(
         F.col("url_hash") == F.xxhash64(F.lit("https://h9.example/x"))
@@ -180,9 +192,6 @@ def test_ingest_composes_with_live_crawl(spark, tmp_path):
     globally unique (the runner resumes past the ingest high-water mark),
     the ingested URL is selectable in the next round, and every engine
     invariant (seen ⊇ frontier keys, unique seq ordering) holds."""
-    from paperchase_crawler_spark import simweb
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
-
     wd = str(tmp_path / "live")
     runner = CrawlRunner(
         spark, wd, round_budget=50, with_bytes=False, frontier_buckets=4
@@ -192,25 +201,14 @@ def test_ingest_composes_with_live_crawl(spark, tmp_path):
     # out-of-band discovery feed lands between rounds (host0 exists in the
     # simweb universe so it is fetchable); it passes the SAME robots gate as
     # in-loop discoveries — include a robots-blocked URL to prove it
-    blocked_url = None
-    for h in simweb.host_state_rows(last_round=0):
-        for rule in h["robots_rules"]:
-            if not rule["allow"]:
-                blocked_url = f"https://{h['host']}{rule['prefix']}x"
-                break
-        if blocked_url:
-            break
-    assert blocked_url is not None
-    rules = runner.host_state.read(spark).select("host", "robots_rules")
+    blocked_url = _blocked_url()
     r = ingest_batch(
-        spark,
+        runner,
         spark.createDataFrame(
             [("https://host0.example/ingested-page", 1), (blocked_url, 2)],
             "raw_url string, src_seq long",
         ),
-        runner.frontier, runner.seen, epoch_id=1,
-        n_buckets=runner.frontier_buckets, salts=runner.frontier_salts,
-        seen_buckets=runner.seen_buckets, robots_rules_df=rules,
+        epoch_id=1,
     )
     assert r["n_new"] == 2
     resumed = CrawlRunner.resume(spark, wd)
@@ -243,9 +241,6 @@ def test_ingest_after_aggressive_retention(spark, tmp_path):
     """Eager compaction + keep_last=1 retention can expire the delta that
     introduced the disc_seq counter; compaction commits must carry it
     forward so a later ingest never reuses live disc_seqs."""
-    from paperchase_crawler_spark import simweb
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
-
     wd = str(tmp_path / "ret")
     runner = CrawlRunner(
         spark, wd, round_budget=50, with_bytes=False, frontier_buckets=4,
@@ -255,13 +250,12 @@ def test_ingest_after_aggressive_retention(spark, tmp_path):
     runner.run(2)
     runner.maintain(keep_last=1)  # expire everything but the compaction
     r = ingest_batch(
-        spark,
+        runner,
         spark.createDataFrame(
             [("https://host0.example/late-feed", 1)],
             "raw_url string, src_seq long",
         ),
-        runner.frontier, runner.seen, epoch_id=5,
-        n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
+        epoch_id=5,
     )
     assert r["n_new"] == 1
     fr = merged_frontier(spark, runner.frontier).collect()
@@ -274,16 +268,11 @@ def test_ingest_after_aggressive_retention(spark, tmp_path):
 def test_ingest_maintains_bloom_invariant(spark, tmp_path):
     """A Bloom-enabled crawl relies on seen-keys ⊆ bloom (filter_new_bucketed
     treats a non-suspect as certainly-new, skipping the exact verify), so
-    ingest must append the new keys' shards too — and must REFUSE to run
-    against a Bloom-enabled crawl without the filter wired in."""
-    import pytest
-
-    from paperchase_crawler_spark import simweb
+    ingest into it always appends the new keys' shards too."""
     from paperchase_crawler_spark.operators.seen import (
         BloomSeen,
         filter_new_bucketed,
     )
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
 
     wd = str(tmp_path / "bloomed")
     runner = CrawlRunner(
@@ -295,26 +284,15 @@ def test_ingest_maintains_bloom_invariant(spark, tmp_path):
     batch = spark.createDataFrame(
         [("https://host0.example/feed-page", 1)], "raw_url string, src_seq long"
     )
-    # without the bloom wired in: hard refusal, nothing committed
-    f_snap = runner.frontier.current_snapshot_id()
-    with pytest.raises(ValueError, match="Bloom"):
-        ingest_batch(
-            spark, batch, runner.frontier, runner.seen, epoch_id=1,
-            n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-        )
-    assert runner.frontier.current_snapshot_id() == f_snap
-    # with it: the ingested key becomes a bloom suspect, so a later in-crawl
-    # rediscovery is filtered as seen instead of re-enqueued
-    r = ingest_batch(
-        spark, batch, runner.frontier, runner.seen, epoch_id=1,
-        n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-        robots_rules_df=runner.host_state.read(spark).select(
-            "host", "robots_rules"
-        ),
-        bloom=runner.bloom, bloom_shards=runner.bloom_shards,
-        bloom_shard_groups=runner.bloom_shard_groups,
-    )
+    b_pre = runner.bloom_shards.current_snapshot_id()
+    r = ingest_batch(runner, batch, epoch_id=1)
     assert r["n_new"] == 1
+    # the epoch appended shards under its own tag
+    b_snap = runner.bloom_shards.current_snapshot_id()
+    assert b_snap != b_pre
+    assert runner.bloom_shards.snapshot()["meta"]["ingest_epochs"][-1] == 1
+    # the ingested key is a bloom suspect, so a later in-crawl rediscovery
+    # is filtered as seen instead of re-enqueued
     cand = batch.select(
         F.xxhash64(F.lit("https://host0.example/feed-page")).alias("url_hash")
     )
@@ -325,13 +303,7 @@ def test_ingest_maintains_bloom_invariant(spark, tmp_path):
     assert new.count() == 0  # rediscovery is recognized as already seen
     assert info["n_suspects"] == 1
     # epoch replay: the bloom table is idempotent like frontier/seen
-    b_snap = runner.bloom_shards.current_snapshot_id()
-    r2 = ingest_batch(
-        spark, batch, runner.frontier, runner.seen, epoch_id=1,
-        n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-        bloom=runner.bloom, bloom_shards=runner.bloom_shards,
-        bloom_shard_groups=runner.bloom_shard_groups,
-    )
+    r2 = ingest_batch(runner, batch, epoch_id=1)
     assert r2["replayed"] is True
     assert runner.bloom_shards.current_snapshot_id() == b_snap
     # the composed crawl keeps running (resume adopts all three tables)
@@ -342,14 +314,66 @@ def test_ingest_maintains_bloom_invariant(spark, tmp_path):
     assert len(seqs) == len(set(seqs))
 
 
+def test_ingest_into_salted_crawl(spark, tmp_path):
+    """Ingest takes the frontier layout from the runner: on a salted crawl
+    every ingested row lands in its (host bucket, url salt) bucket, the
+    robots gate still applies, and the next round keeps disc_seq unique."""
+    import pyarrow.parquet as pq
+
+    from paperchase_crawler_spark.functions.urlnorm import canon_url
+
+    runner = CrawlRunner(
+        spark, str(tmp_path / "salted"), round_budget=50, with_bytes=False,
+        frontier_buckets=NB, frontier_salts=2,
+    )
+    runner.init_from_seeds(simweb.seed_urls(8))
+    runner.run(1)
+    blocked_url = _blocked_url()
+    feed = [f"https://host{i}.example/salted-{i}" for i in range(6)]
+    r = ingest_batch(
+        runner,
+        spark.createDataFrame(
+            [(u, i) for i, u in enumerate(feed + [blocked_url])],
+            "raw_url string, src_seq long",
+        ),
+        epoch_id=8,
+    )
+    assert r["n_new"] == len(feed) + 1
+    # the epoch's delta files, by the physical bucket they were written to
+    sid = runner.frontier.current_snapshot_id()
+    rows = [
+        (row["host"], row["url_hash"], row["canon_url"], int(b))
+        for b, v in runner.frontier.bucket_plan().items()
+        for f in v["delta"]
+        if f"/s{sid}-" in f
+        for row in pq.read_table(f, columns=["host", "url_hash", "canon_url"]).to_pylist()
+    ]
+    got = spark.createDataFrame(
+        rows, "host string, url_hash long, canon_url string, fb int"
+    )
+    assert {row["canon_url"] for row in got.collect()} == {
+        canon_url(u) for u in feed + [blocked_url]
+    }
+    assert got.filter(F.col("fb") != frontier_bucket_col(NB, 2)).count() == 0
+    urls = {row["canon_url"]: row for row in runner.frontier_df().collect()}
+    blocked = urls[canon_url(blocked_url)]
+    assert blocked["state"] == "blocked" and blocked["round_done"] == -1
+    runner.run_round()
+    fr = runner.frontier_df().collect()
+    seqs = [row["disc_seq"] for row in fr]
+    assert len(seqs) == len(set(seqs))
+    assert runner.next_disc_seq == max(seqs) + 1
+    assert {row["canon_url"]: row["state"] for row in fr}[
+        canon_url(blocked_url)
+    ] == "blocked"
+
+
 def test_resume_adopts_ingest_past_crash_garbage(spark, tmp_path):
     """Rolled-back-over crashed-round snapshots keep ids BETWEEN the
     checkpoint and a later legitimate ingest commit. Resume must adopt by
     parent chain — an ascending id scan would stop on the garbage id and
     silently roll back the committed ingest epoch (which the stream
     checkpoint will never redeliver)."""
-    from paperchase_crawler_spark import simweb
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
     from paperchase_crawler_spark.schemas import FRONTIER
 
     wd = str(tmp_path / "chain")
@@ -371,13 +395,12 @@ def test_resume_adopts_ingest_past_crash_garbage(spark, tmp_path):
     runner.frontier.rollback(ckpt_snap)
     # a legitimate ingest epoch lands AFTER the crash+rollback
     r = ingest_batch(
-        spark,
+        runner,
         spark.createDataFrame(
             [("https://host0.example/after-crash", 1)],
             "raw_url string, src_seq long",
         ),
-        runner.frontier, runner.seen, epoch_id=3,
-        n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
+        epoch_id=3,
     )
     assert r["n_new"] == 1
     ingest_snap = runner.frontier.current_snapshot_id()
@@ -397,9 +420,6 @@ def test_midround_ingest_fails_stop_and_resumes(spark, tmp_path):
     replay cleanly after resume."""
     import pytest
 
-    from paperchase_crawler_spark import simweb
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
-
     wd = str(tmp_path / "midround")
     runner = CrawlRunner(
         spark, wd, round_budget=50, with_bytes=False, frontier_buckets=4
@@ -407,23 +427,20 @@ def test_midround_ingest_fails_stop_and_resumes(spark, tmp_path):
     runner.init_from_seeds(simweb.seed_urls(8))
     runner.run(1)
     # inject an ingest epoch in the middle of round 2 (during EXPAND,
-    # before the HWM guard + commit phase) by hooking _new_frontier_rows
-    # (r6 moved the ordering append — the old hook point — into the
-    # concurrent commit pool, after the guard)
+    # before the HWM guard + commit phase) by hooking _new_frontier_rows.
+    # The feed runs on its own handle: ingest enqueues through
+    # _new_frontier_rows too, so on the hooked runner it would recurse.
+    feed = CrawlRunner.resume(spark, wd)
     orig_nfr = runner._new_frontier_rows
 
     def hooked(cand, round_disc):
         ingest_batch(
-            spark,
+            feed,
             spark.createDataFrame(
                 [("https://host0.example/raced", 1)],
                 "raw_url string, src_seq long",
             ),
-            runner.frontier, runner.seen, epoch_id=11,
-            n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-            robots_rules_df=runner.host_state.read(spark).select(
-                "host", "robots_rules"
-            ),
+            epoch_id=11,
         )
         return orig_nfr(cand, round_disc)
 
@@ -448,9 +465,7 @@ def test_ingest_bloom_crash_window_preserves_seen_subset_bloom(spark, tmp_path):
     must be a bloom suspect (seen ⊆ bloom). The r4 order (seen first) had a
     corrupting window: the replay's anti-join against the already-updated
     seen table returned zero keys and the bloom append was skipped forever."""
-    from paperchase_crawler_spark import simweb
     from paperchase_crawler_spark.operators.seen import BloomSeen
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
 
     wd = str(tmp_path / "bw")
     runner = CrawlRunner(
@@ -463,12 +478,7 @@ def test_ingest_bloom_crash_window_preserves_seen_subset_bloom(spark, tmp_path):
         [("https://host0.example/window-page", 1)], "raw_url string, src_seq long"
     )
     seen_pre = runner.seen.current_snapshot_id()
-    kw = dict(
-        n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-        bloom=runner.bloom, bloom_shards=runner.bloom_shards,
-        bloom_shard_groups=runner.bloom_shard_groups,
-    )
-    ingest_batch(spark, batch, runner.frontier, runner.seen, epoch_id=2, **kw)
+    ingest_batch(runner, batch, epoch_id=2)
 
     def _seen_subset_bloom():
         keys = runner.seen.read(spark)
@@ -482,7 +492,7 @@ def test_ingest_bloom_crash_window_preserves_seen_subset_bloom(spark, tmp_path):
     _seen_subset_bloom()
     # ...and the replay must complete the seen append without touching bloom
     b_snap = runner.bloom_shards.current_snapshot_id()
-    r = ingest_batch(spark, batch, runner.frontier, runner.seen, epoch_id=2, **kw)
+    r = ingest_batch(runner, batch, epoch_id=2)
     assert r["replayed"] is False and r["n_new"] == 1
     assert runner.bloom_shards.current_snapshot_id() == b_snap
     _seen_subset_bloom()
@@ -501,8 +511,6 @@ def test_ingest_refuses_crash_garbage_tip(spark, tmp_path):
     same feed lands cleanly."""
     import pytest
 
-    from paperchase_crawler_spark import simweb
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
     from paperchase_crawler_spark.schemas import FRONTIER
 
     wd = str(tmp_path / "garbage-tip")
@@ -524,16 +532,10 @@ def test_ingest_refuses_crash_garbage_tip(spark, tmp_path):
         [("https://host0.example/feed", 1)], "raw_url string, src_seq long"
     )
     with pytest.raises(ValueError, match="crash garbage"):
-        ingest_batch(
-            spark, batch, runner.frontier, runner.seen, epoch_id=4,
-            n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-        )
+        ingest_batch(runner, batch, epoch_id=4)
     assert runner.frontier.current_snapshot_id() == garbage_snap  # no commit
     resumed = CrawlRunner.resume(spark, wd)  # rolls the garbage back
-    r = ingest_batch(
-        spark, batch, resumed.frontier, resumed.seen, epoch_id=4,
-        n_buckets=resumed.frontier_buckets, seen_buckets=resumed.seen_buckets,
-    )
+    r = ingest_batch(resumed, batch, epoch_id=4)
     assert r["n_new"] == 1
     urls = {row["canon_url"] for row in merged_frontier(spark, resumed.frontier).collect()}
     assert "https://host0.example/feed" in urls
@@ -546,9 +548,7 @@ def test_ingest_crash_after_frontier_before_bloom_recovers(spark, tmp_path):
     frontier, recompute the SAME key set (seen untouched ⇒ the anti-join
     is unchanged), append bloom then seen, and end with seen ⊆ bloom —
     with no duplicate frontier rows and no disc_seq drift."""
-    from paperchase_crawler_spark import simweb
     from paperchase_crawler_spark.operators.seen import BloomSeen
-    from paperchase_crawler_spark.plans.crawl import CrawlRunner
 
     wd = str(tmp_path / "fb")
     runner = CrawlRunner(
@@ -562,17 +562,12 @@ def test_ingest_crash_after_frontier_before_bloom_recovers(spark, tmp_path):
     )
     seen_pre = runner.seen.current_snapshot_id()
     bloom_pre = runner.bloom_shards.current_snapshot_id()
-    kw = dict(
-        n_buckets=runner.frontier_buckets, seen_buckets=runner.seen_buckets,
-        bloom=runner.bloom, bloom_shards=runner.bloom_shards,
-        bloom_shard_groups=runner.bloom_shard_groups,
-    )
-    ingest_batch(spark, batch, runner.frontier, runner.seen, epoch_id=6, **kw)
+    ingest_batch(runner, batch, epoch_id=6)
     f_snap = runner.frontier.current_snapshot_id()
     # the crash window: roll BOTH bloom and seen back (frontier stands)
     runner.seen.rollback(seen_pre)
     runner.bloom_shards.rollback(bloom_pre)
-    r = ingest_batch(spark, batch, runner.frontier, runner.seen, epoch_id=6, **kw)
+    r = ingest_batch(runner, batch, epoch_id=6)
     assert r["replayed"] is False and r["n_new"] == 1
     assert runner.frontier.current_snapshot_id() == f_snap  # not re-applied
     fr = merged_frontier(spark, runner.frontier).collect()

@@ -96,23 +96,18 @@ def test_soak_with_interleaved_ingest_invariants(spark, tmp_path):
     wd = str(tmp_path / "soak_ingest")
     runner = CrawlRunner(spark, wd, **TIGHT)
     runner.init_from_seeds(SEEDS)
-    rules = runner.host_state.read(spark).select("host", "robots_rules")
     hwms = []
     for i in range(ROUNDS):
         runner.run_round()
         hwms.append(runner._frontier_disc_hwm())
         if i in (2, 6):
             r = ingest_batch(
-                spark,
+                runner,
                 spark.createDataFrame(
                     [(f"https://host{i}.example/feed-{j}", j) for j in range(5)],
                     "raw_url string, src_seq long",
                 ),
-                runner.frontier, runner.seen, epoch_id=100 + i,
-                n_buckets=runner.frontier_buckets, salts=runner.frontier_salts,
-                seen_buckets=runner.seen_buckets, robots_rules_df=rules,
-                bloom=runner.bloom, bloom_shards=runner.bloom_shards,
-                bloom_shard_groups=runner.bloom_shard_groups,
+                epoch_id=100 + i,
             )
             assert r["n_new"] == 5
             runner = CrawlRunner.resume(spark, wd)  # adopt the epochs
