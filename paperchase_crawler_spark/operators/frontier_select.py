@@ -9,7 +9,8 @@ frontier") cannot re-shuffle the whole frontier every round. Layout invariant
   every version of a URL in exactly ONE bucket;
 - the base is written once; each round appends per-bucket DELTA files of full
   replacement rows tagged with a monotone ``__rev`` (the snapshot id);
-- compaction folds deltas into a fresh base when they outgrow it.
+- compaction folds a bucket's deltas into a fresh base once the bucket
+  holds too many files.
 
 ``select_candidates`` plans one narrow task per bucket (per-bucket file scans
 coalesced to one partition, unioned — NO shuffle): each task merges last-wins
@@ -199,31 +200,35 @@ def select_candidates(
 #
 # The r2 design still read EVERY bucket's files each round — O(frontier) disk
 # per round even when 99.99% of rows cannot win the budget cut. Zone maps fix
-# it: each bucketed commit records, per file, the QUEUED-row count, the
-# lexicographic min (depth, disc_seq) among queued rows, and the queued host
-# count (with real Iceberg these are manifest column stats written for free).
-# The planner sorts buckets by their best possible candidate key, scans a
-# prefix whose politeness-capped capacity covers ``overscan × budget``, and
-# skips the rest. Exactness is verified, not assumed: with
-#   τ = min over SKIPPED buckets of zone-min queued key,
-# every row in a skipped bucket has key ≥ τ (keys are immutable per URL and a
-# queued row's latest version is queued in some file, so file-level mins lower-
-# bound the merged view). The per-host token cut restricted to scanned buckets
-# provably agrees with the full-scan cut on all rows with key < τ (any row of
-# the same host that could displace them also has key < τ and therefore lives
-# in a scanned bucket — a skipped-bucket row can only displace keys ≥ τ). So if
-# the post-eligibility, post-token-cut survivor set holds ≥ budget rows with
-# key < τ, the global top-budget is identical to the full scan's; otherwise the
-# caller falls back to the full scan (select_frontier_round). Buckets whose
-# zone maps show ZERO queued rows are always skipped — that is exact
-# unconditionally and needs no τ.
+# it: each bucketed commit records, per file, the queued rows per depth
+# (``depth_hist``), the same capped at ``max_tokens`` rows per host
+# (``sel_hist``) and the fetched rows per depth (``fetched_hist``); with real
+# Iceberg these are manifest column stats written for free. The snapshot
+# summary of a bucket nets them into the merged view's queued histogram
+# (IceTable._summarize). The planner picks the smallest depth d* whose capped
+# supply covers ``overscan × budget``, sets τ = (d*, +∞), scans only buckets
+# with a queued row at depth ≤ d* and filters rows to key < τ. Exactness is
+# verified, not assumed: every row of a skipped bucket or above d* has key
+# ≥ τ, because the bucket histograms never undercount the merged view. The
+# per-host token cut restricted to rows with key < τ provably agrees with the
+# full-scan cut on those rows (any row of the same host that could displace
+# them also has key < τ). So if the post-eligibility, post-token-cut survivor
+# set holds ≥ budget rows with key < τ, the global top-budget is identical to
+# the full scan's; otherwise the caller falls back to the full scan
+# (select_frontier_round). Buckets whose histograms show ZERO queued rows are
+# always skipped — that is exact unconditionally and needs no τ.
 
-ZONE_COLS = ["state", "depth", "disc_seq", "host"]
-_ZONE_SCHEMA = (
-    "file string, n_queued long, min_depth int, min_seq long, n_hosts long, "
-    "depth_hist string, sel_hist string"
-)
+ZONE_COLS = ["state", "depth", "host"]
+_ZONE_SCHEMA = "file string, depth_hist string, sel_hist string, fetched_hist string"
+_HISTS = ("depth_hist", "sel_hist", "fetched_hist")
 _MAX_SEQ = (1 << 63) - 1  # exclusive disc_seq sentinel: key < (d, _MAX_SEQ) ⟺ depth ≤ d
+
+
+def _depth_counts(depth) -> dict[int, int]:
+    import numpy as np
+
+    vals, cnts = np.unique(depth, return_counts=True)
+    return {int(v): int(c) for v, c in zip(vals, cnts)}
 
 
 def _zone_stats_one(f: str, max_tokens: int) -> dict:
@@ -234,21 +239,14 @@ def _zone_stats_one(f: str, max_tokens: int) -> dict:
     import pyarrow.parquet as pq
 
     t = pq.read_table(f, columns=ZONE_COLS)
+    fetched = t.filter(pc.equal(t.column("state"), "fetched")).column("depth").to_numpy()
+    out = {"depth_hist": {}, "sel_hist": {}, "fetched_hist": _depth_counts(fetched)}
     q = t.filter(pc.equal(t.column("state"), "queued"))
     if q.num_rows == 0:
-        return {
-            "n_queued": 0, "min_depth": 0, "min_seq": 0, "n_hosts": 0,
-            "depth_hist": {}, "sel_hist": {},
-        }
+        return out
     q = q.combine_chunks()
     depth = q.column("depth").to_numpy()
-    seq = q.column("disc_seq").to_numpy()
-    d = int(depth.min())
-    s = int(seq[depth == d].min())
     hcodes = q.column("host").chunk(0).dictionary_encode().indices.to_numpy()
-    nh = int(hcodes.max()) + 1 if len(hcodes) else 0
-    vals, cnts = np.unique(depth, return_counts=True)
-    hist = {int(v): int(c) for v, c in zip(vals, cnts)}
     # capped supply: first max_tokens rows per host in depth order,
     # histogrammed by depth
     order = np.lexsort((depth, hcodes))
@@ -259,29 +257,28 @@ def _zone_stats_one(f: str, max_tokens: int) -> dict:
         new_host[1:] = hs_[1:] != hs_[:-1]
     start = np.maximum.accumulate(np.where(new_host, idx, 0))
     keep = (idx - start) < max_tokens
-    sv, sc = np.unique(ds_[keep], return_counts=True)
-    sel = {int(v): int(c) for v, c in zip(sv, sc)}
-    return {
-        "n_queued": q.num_rows, "min_depth": d, "min_seq": s, "n_hosts": nh,
-        "depth_hist": hist, "sel_hist": sel,
-    }
+    out["depth_hist"] = _depth_counts(depth)
+    out["sel_hist"] = _depth_counts(ds_[keep])
+    return out
 
 
 def compute_frontier_zones(
     spark: SparkSession, files: list[str], max_tokens: int = 8
 ) -> dict[str, dict]:
     """Per-file zone stats for frontier parquet files, computed in one narrow
-    distributed pass over 4 columns of the NEW files only (a delta commit's
+    distributed pass over 3 columns of the NEW files only (a delta commit's
     zone cost is O(changed); real Iceberg writers emit these in manifests at
     write time with zero extra IO).
 
     ``sel_hist`` is the politeness-capped SUPPLY curve: queued rows per depth
-    counting at most ``max_tokens`` rows per host (in depth order) — an exact
+    counting at most ``max_tokens`` rows per host (in depth order) — an
     upper bound on how many post-token-cut survivors the file can contribute
     below any depth, which is what the pruning planner actually needs (raw
     row counts overestimate Zipf-hot buckets by the hot host's whole tail).
     Computing it with a LARGER max_tokens than the engine's stays an upper
     bound (safe, just looser); a smaller one only risks extra fallback.
+    ``fetched_hist`` lets the bucket summary net out the queued versions
+    that later delta files replaced (IceTable._summarize).
 
     Small commits (≤ 64 MB across the new files — every per-round delta)
     compute inline on the driver: a Spark job costs ~0.4 s of fixed overhead
@@ -306,34 +303,15 @@ def compute_frontier_zones(
     def _stats(batches):
         import pyarrow as pa
 
-        schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("n_queued", pa.int64()),
-                ("min_depth", pa.int32()),
-                ("min_seq", pa.int64()),
-                ("n_hosts", pa.int64()),
-                ("depth_hist", pa.string()),
-                ("sel_hist", pa.string()),
-            ]
-        )
         for rb in batches:
-            out: dict[str, list] = {
-                "file": [], "n_queued": [], "min_depth": [],
-                "min_seq": [], "n_hosts": [], "depth_hist": [], "sel_hist": [],
-            }
-            for f in rb.column("file").to_pylist():
-                z = _zone_stats_one(f, max_tokens)
-                out["file"].append(f)
-                out["n_queued"].append(z["n_queued"])
-                out["min_depth"].append(z["min_depth"])
-                out["min_seq"].append(z["min_seq"])
-                out["n_hosts"].append(z["n_hosts"])
-                out["depth_hist"].append(json.dumps(z["depth_hist"]))
-                out["sel_hist"].append(json.dumps(z["sel_hist"]))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(v, type=schema.field(i).type) for i, v in enumerate(out.values())],
-                schema=schema,
+            names = rb.column("file").to_pylist()
+            zones = [_zone_stats_one(f, max_tokens) for f in names]
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "file": names,
+                    **{h: [json.dumps(z[h]) for z in zones] for h in _HISTS},
+                },
+                schema=pa.schema([(c, pa.string()) for c in ("file", *_HISTS)]),
             )
 
     mf = spark.createDataFrame([(f,) for f in files], "file string").repartition(
@@ -341,14 +319,7 @@ def compute_frontier_zones(
     )
     rows = mf.mapInArrow(_stats, _ZONE_SCHEMA).collect()
     return {
-        r["file"]: {
-            "n_queued": r["n_queued"],
-            "min_depth": r["min_depth"],
-            "min_seq": r["min_seq"],
-            "n_hosts": r["n_hosts"],
-            "depth_hist": json.loads(r["depth_hist"]),
-            "sel_hist": json.loads(r["sel_hist"]),
-        }
+        r["file"]: {h: {int(d): n for d, n in json.loads(r[h]).items()} for h in _HISTS}
         for r in rows
     }
 
@@ -377,8 +348,8 @@ def _pruned_bucket_plan(
     alone cannot prune a uniform frontier) AND at bucket level (buckets with
     no queued row below tau are never opened). Buckets with zero queued rows
     anywhere are skipped unconditionally — exact with no verification, since
-    a row whose latest version is queued is queued in some file, so the
-    summary's per-file-aggregated histograms upper-bound the merged view."""
+    the summary histograms count the merged view's queued rows exactly
+    (IceTable._summarize)."""
     entries = []  # (bucket_key, hist) for queued-bearing buckets
     n_total = 0
     depth_tot: dict[int, int] = {}

@@ -11,7 +11,8 @@ Each round is a Catalyst-planned batch job over snapshot-versioned tables:
           xxhash64 → first-discovery dedup (min struct) → seen anti-join
           (optionally Bloom-accelerated) → robots gate (JVM HOFs) → new rows
   COMMIT  corpus.append ∥ seen.append ∥ frontier DELTA append (state
-          transitions + new rows; compacted when deltas outgrow the base) ∥
+          transitions + new rows; a bucket is compacted once it holds more
+          than max_bucket_files files) ∥
           host_state update ∥ ordering/metrics append — then one atomic
           CHECKPOINT swap
 
@@ -58,6 +59,7 @@ from ..functions.spark_udfs import (
     fetch_outlinks_map_in_arrow,
 )
 from ..operators.frontier_select import (
+    FRONTIER_REV_SCHEMA,
     compacted_frontier,
     compute_frontier_zones,
     frontier_bucket_col,
@@ -68,7 +70,9 @@ from ..operators.materialize import Materializer
 from ..operators.ordering import ranked_cut
 from ..operators.robots import blocked_expr, path_col
 from ..operators.seen import BloomSeen, filter_new, filter_new_bucketed
-from ..schemas import HOST_STATE, HOST_TOUCH
+from ..schemas import (
+    BLOOM_SHARD, CORPUS, CRAWL_LOG, HOST_STATE, HOST_TOUCH, ORDERING, URL_SEEN,
+)
 from ..sources.icetable import IceTable
 
 FRONTIER_COLS = [
@@ -93,12 +97,11 @@ class CrawlRunner:
         frontier_buckets: int = 16,
         frontier_salts: int = 1,
         max_tokens: int = 8,
-        compact_delta_frac: float = 0.5,
         bloom_shards_per_bucket: int = 8,
         bloom_shard_groups: int = 16,
         rows_per_bucket_target: int = 5_000_000,
         seen_buckets: int = 64,
-        seen_files_per_bucket: int = 8,
+        max_bucket_files: int = 8,
         checkpoint: str = "local",
     ):
         # intra-round lineage cuts of reused DataFrames (select, fetched,
@@ -116,27 +119,30 @@ class CrawlRunner:
         # is the engine-wide upper bound on any host's tokens_per_round (the
         # per-bucket Arrow pre-cut keeps that many rows per host — asserted
         # against host_state at init). frontier_buckets is the INITIAL count:
-        # compaction doubles it whenever a bucket's rows exceed
+        # a re-bucket doubles it whenever a bucket's rows exceed
         # rows_per_bucket_target, so bucket size tracks frontier growth.
         self.frontier_buckets = frontier_buckets
         self.frontier_salts = frontier_salts
         self.max_tokens = max_tokens
-        self.compact_delta_frac = compact_delta_frac
         self.bloom_shards_per_bucket = bloom_shards_per_bucket
         self.bloom_shard_groups = bloom_shard_groups
         self.rows_per_bucket_target = rows_per_bucket_target
         # seen layout: pmod(url_hash, seen_buckets) — lets the exact verify
         # read ONLY the buckets Bloom suspects hash into (filter_new_bucketed)
         self.seen_buckets = seen_buckets
-        self.seen_files_per_bucket = seen_files_per_bucket
-        self.frontier = IceTable(os.path.join(workdir, "frontier"))
-        self.corpus = IceTable(os.path.join(workdir, "corpus"))
-        self.seen = IceTable(os.path.join(workdir, "seen"))
-        self.ordering = IceTable(os.path.join(workdir, "ordering"))
-        self.crawl_log = IceTable(os.path.join(workdir, "crawl_log"))
-        self.host_state = IceTable(os.path.join(workdir, "host_state"))
-        self.host_touch = IceTable(os.path.join(workdir, "host_touch"))
-        self.bloom_shards = IceTable(os.path.join(workdir, "bloom_shards"))
+        # read amplification bound of the frontier and seen tables: a bucket
+        # holding more files than this is compacted (IRLbot's DRUM merge
+        # rule, Iceberg's file-count-triggered rewrite)
+        self.max_bucket_files = max_bucket_files
+        # every table declares its written schema, so no read infers it
+        self.frontier = IceTable(os.path.join(workdir, "frontier"), FRONTIER_REV_SCHEMA)
+        self.corpus = IceTable(os.path.join(workdir, "corpus"), CORPUS)
+        self.seen = IceTable(os.path.join(workdir, "seen"), URL_SEEN)
+        self.ordering = IceTable(os.path.join(workdir, "ordering"), ORDERING)
+        self.crawl_log = IceTable(os.path.join(workdir, "crawl_log"), CRAWL_LOG)
+        self.host_state = IceTable(os.path.join(workdir, "host_state"), HOST_STATE)
+        self.host_touch = IceTable(os.path.join(workdir, "host_touch"), HOST_TOUCH)
+        self.bloom_shards = IceTable(os.path.join(workdir, "bloom_shards"), BLOOM_SHARD)
         self.round = 0
         self.next_disc_seq = 0
         self.next_seq = 0
@@ -169,12 +175,11 @@ class CrawlRunner:
             "frontier_buckets": self.frontier_buckets,
             "frontier_salts": self.frontier_salts,
             "max_tokens": self.max_tokens,
-            "compact_delta_frac": self.compact_delta_frac,
             "bloom_shards_per_bucket": self.bloom_shards_per_bucket,
             "bloom_shard_groups": self.bloom_shard_groups,
             "rows_per_bucket_target": self.rows_per_bucket_target,
             "seen_buckets": self.seen_buckets,
-            "seen_files_per_bucket": self.seen_files_per_bucket,
+            "max_bucket_files": self.max_bucket_files,
             "checkpoint": self.checkpoint,
             "bloom": None
             if self.bloom is None
@@ -210,12 +215,14 @@ class CrawlRunner:
             frontier_buckets=state["frontier_buckets"],
             frontier_salts=state["frontier_salts"],
             max_tokens=state["max_tokens"],
-            compact_delta_frac=state["compact_delta_frac"],
             bloom_shards_per_bucket=state["bloom_shards_per_bucket"],
             bloom_shard_groups=state["bloom_shard_groups"],
             rows_per_bucket_target=state["rows_per_bucket_target"],
             seen_buckets=state["seen_buckets"],
-            seen_files_per_bucket=state["seen_files_per_bucket"],
+            # checkpoints written before the rename carry the seen bound
+            max_bucket_files=state.get(
+                "max_bucket_files", state.get("seen_files_per_bucket", 8)
+            ),
             checkpoint=state.get("checkpoint", "local"),
         )
         r.round = state["round"]
@@ -313,25 +320,21 @@ class CrawlRunner:
         )
 
     def _frontier_append_delta(self, df: DataFrame, meta: dict | None = None) -> None:
-        """O(changed rows) frontier commit; compaction folds deltas into a
-        fresh base once they exceed compact_delta_frac of it. Compaction is
-        bucket-local AND bucket-scoped: one task per DELTA-BEARING bucket
-        merges its own base ∪ delta files and writes its own compacted file —
-        no shuffle (rows never change bucket), and buckets the round never
-        touched are neither read nor rewritten (overwrite_buckets_partial)."""
+        """O(changed rows) frontier commit. A bucket is compacted once it
+        holds more than max_bucket_files files, i.e. when a read of it must
+        open too many; between compactions the bucket summaries stay exact
+        (IceTable._summarize). Compaction is bucket-local AND bucket-scoped:
+        one task per hot bucket merges its own base ∪ delta files and writes
+        its own compacted file — no shuffle (rows never change bucket), and
+        other buckets are neither read nor rewritten
+        (overwrite_buckets_partial)."""
         self.frontier.append_bucketed_delta(
             self._with_layout(df.select(*FRONTIER_COLS)),
             meta=meta,
             zone_fn=self._zone_fn,
         )
-        if self.frontier.delta_fraction() > self.compact_delta_frac:
-            # hot buckets straight off the snapshot summaries — no manifest
-            # IO for cold buckets
-            hot = [
-                b
-                for b, s in self.frontier.bucket_summaries().items()
-                if s["n_delta_files"]
-            ]
+        hot = self._hot_buckets(self.frontier)
+        if hot:
             merged = compacted_frontier(
                 self.spark,
                 self.frontier,
@@ -350,11 +353,22 @@ class CrawlRunner:
                 merged, hot, meta={"op": "compaction", **carry},
                 zone_fn=self._zone_fn,
             )
-            self._maybe_split_buckets()
+        self._maybe_split_buckets()
+
+    def _hot_buckets(self, tbl: IceTable) -> list[str]:
+        """Buckets holding more than max_bucket_files files, straight off
+        the snapshot summaries — no manifest IO for cold buckets."""
+        return [
+            b
+            for b, s in tbl.bucket_summaries().items()
+            if s["n_base_files"] + s["n_delta_files"] > self.max_bucket_files
+        ]
 
     def _maybe_split_buckets(self) -> None:
         """Re-bucket when any bucket outgrows rows_per_bucket_target (checked
-        from snapshot row counts — no data read). Doubling the host-hash
+        after every frontier commit from the snapshot's row counts, which
+        include the not-yet-compacted versions a merge task reads — no data
+        read). Doubling the host-hash
         bucket count rewrites the whole frontier once (the ONLY non-bucket-
         local maintenance op, amortized over the growth that triggered it) so
         per-bucket merge tasks stay memory-bounded as the frontier grows."""
@@ -371,7 +385,7 @@ class CrawlRunner:
             # the oversized bucket is single-host skew, which doubling the
             # HOST-hash bucket count can never split (a host always lands in
             # `salts` buckets) — frontier_salts is the knob for that; forcing
-            # a doubling here would re-double on every compaction forever
+            # a doubling here would re-double on every commit forever
             return
         hwm = self._frontier_disc_hwm()
         merged = merged_frontier(self.spark, self.frontier).select(*FRONTIER_COLS)
@@ -412,21 +426,15 @@ class CrawlRunner:
         ).repartition(sb, F.col("__fb"))
 
     def _maybe_compact_seen(self, r: int) -> None:
-        """Fold a seen bucket's delta files into one once they exceed
-        seen_files_per_bucket — bucket-scoped like the Bloom/frontier
-        compactions: cold buckets' files are untouched."""
-        hot = [
-            b
-            for b, s in self.seen.bucket_summaries().items()
-            if s["n_base_files"] + s["n_delta_files"] > self.seen_files_per_bucket
-        ]
+        """Fold a seen bucket's delta files into one once it holds more than
+        max_bucket_files — bucket-scoped like the Bloom/frontier compactions:
+        cold buckets' files are untouched."""
+        hot = self._hot_buckets(self.seen)
         if not hot:
             return
         plan = self.seen.bucket_plan(buckets=hot)
         files = [f for b in hot for f in plan[b]["base"] + plan[b]["delta"]]
-        merged = self._seen_layout(
-            self.spark.read.schema("url_hash long").parquet(*files)
-        )
+        merged = self._seen_layout(self.seen.read_files(self.spark, files))
         self.seen.overwrite_buckets_partial(
             merged, hot, meta={"round": r, "op": "compaction"}
         )
@@ -509,8 +517,7 @@ class CrawlRunner:
         """cand rows whose url_hash is not in seen → (new, info for the
         crawl_log). Shared by EXPAND and streaming ingest."""
         if self.bloom is None or self.bloom_shards.current_snapshot_id() is None:
-            seen = self.spark.read.schema("url_hash long").parquet(*self.seen.files_at())
-            return filter_new(cand, seen), {"path": "exact_full_scan"}
+            return filter_new(cand, self.seen.read(self.spark)), {"path": "exact_full_scan"}
         # bucket-pruned exact verify: reads only the seen buckets the Bloom
         # suspects hash into, never the whole seen set
         return filter_new_bucketed(
@@ -891,7 +898,9 @@ class CrawlRunner:
             return
         plan = self.bloom_shards.bucket_plan(buckets=hot)
         hot_files = [f for g in hot for f in plan[g]["base"] + plan[g]["delta"]]
-        merged = self.bloom.merge(self.spark.read.parquet(*hot_files)).withColumn(
+        merged = self.bloom.merge(
+            self.bloom_shards.read_files(self.spark, hot_files)
+        ).withColumn(
             "__fb", self._bloom_group_col()
         )
         self.bloom_shards.overwrite_buckets_partial(

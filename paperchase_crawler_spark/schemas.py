@@ -1,8 +1,10 @@
 """Fixed, explicit Spark schemas for every engine table (SURVEY.md §1.2).
 
-Schema inference is never used inside the engine: the corpus shape is pinned
-verbatim by BASELINE.json input_hint; frontier/host_state/fetch-result shapes
-are the engine's own design (SURVEY.md §1.2). Reference provenance: the
+Schema inference is never used inside the engine: every table the crawl
+opens is an IceTable declaring its schema from here (the frontier's adds the
+__rev column), so no read pays a footer-inference job. The corpus shape is
+pinned verbatim by BASELINE.json input_hint; frontier/host_state/fetch-result
+shapes are the engine's own design (SURVEY.md §1.2). Reference provenance: the
 reference snapshot is empty (SURVEY.md §0), so there are no file:line
 citations — BASELINE.json:14-15 (north_rule, input_hint) is the authority.
 """

@@ -31,6 +31,7 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _row_counts(files: list[str]) -> dict[str, int]:
@@ -55,8 +56,11 @@ class IceTable:
     # snapshots (and retention only has to pin that much extra history)
     ROLLUP_EVERY = 16
 
-    def __init__(self, path: str):
+    def __init__(self, path: str, schema: StructType | None = None):
         self.path = path
+        # the written data schema (bucketed tables: without the __fb
+        # partition column); None ⇒ reads infer it from the file footers
+        self.schema = schema
         self.data_dir = os.path.join(path, "data")
         self.meta_dir = os.path.join(path, "metadata")
         self.manifest_dir = os.path.join(self.meta_dir, "manifests")
@@ -182,7 +186,8 @@ class IceTable:
     # APPENDS per-bucket delta files carrying full replacement rows tagged
     # with a monotone __rev column (the snapshot id). Readers merge
     # last-wins per key WITHIN each bucket — a narrow, shuffle-free plan —
-    # and compaction folds deltas back into the base when they outgrow it.
+    # and compaction folds a bucket's deltas back into its base once the
+    # bucket holds too many files.
     # This replaces the full-table overwrite per round: a round commits
     # O(changed rows), not O(frontier).
     #
@@ -252,9 +257,20 @@ class IceTable:
     def _summarize(entry: dict) -> dict:
         """Per-bucket summary carried in the snapshot (the manifest-list
         row): row/file counts always; when EVERY file in the bucket has zone
-        stats, the aggregated queued-depth histograms the pruning planner
-        needs (``zoned`` False ⇒ planners must treat the bucket as unknown
-        and fall back to scanning it)."""
+        stats, the queued-depth histograms the pruning planner needs
+        (``zoned`` False ⇒ planners must treat the bucket as unknown and
+        fall back to scanning it).
+
+        The histograms describe the MERGED view, not the sum of the files.
+        Every ``fetched`` row in a DELTA file replaces exactly one queued
+        version of the same URL, at the same depth, in an earlier file of
+        the bucket: fetched is terminal, a URL never changes bucket, and new
+        and ingested rows are never fetched. So each delta file's
+        ``fetched_hist`` is subtracted, which makes ``depth_hist`` and
+        ``n_queued`` equal the compacted bucket's. ``sel_hist`` (capped per
+        host) can only err low, i.e. towards a deeper τ. A base file's
+        fetched rows replace nothing: compaction already dropped their
+        queued versions."""
         counts = entry["row_counts"]
         base_rows = sum(counts[f] for f in entry["base"])
         delta_rows = sum(counts[f] for f in entry["delta"])
@@ -267,33 +283,33 @@ class IceTable:
             "n_delta_files": len(entry["delta"]),
         }
         zones = entry.get("zones", {})
-        if all(f in zones and "sel_hist" in zones[f] for f in files):
-            n_queued = 0
-            depth_hist: dict[str, int] = {}
-            sel_hist: dict[str, int] = {}
-            min_key = None
-            for f in files:
-                z = zones[f]
-                n_queued += z["n_queued"]
-                for d, n in z.get("depth_hist", {}).items():
-                    depth_hist[str(d)] = depth_hist.get(str(d), 0) + n
-                for d, n in z.get("sel_hist", {}).items():
-                    sel_hist[str(d)] = sel_hist.get(str(d), 0) + n
-                if z["n_queued"]:
-                    k = (z["min_depth"], z["min_seq"])
-                    min_key = k if min_key is None else min(min_key, k)
-            s.update(
-                {
-                    "zoned": True,
-                    "n_queued": n_queued,
-                    "depth_hist": depth_hist,
-                    "sel_hist": sel_hist,
-                    "min_depth": min_key[0] if min_key else 0,
-                    "min_seq": min_key[1] if min_key else 0,
-                }
-            )
-        else:
+        if not all(f in zones and "sel_hist" in zones[f] for f in files):
             s["zoned"] = False
+            return s
+        depth_hist: dict[str, int] = {}
+        sel_hist: dict[str, int] = {}
+
+        def add(hist: dict, by_depth: dict, sign: int) -> None:
+            for d, n in by_depth.items():
+                hist[str(d)] = hist.get(str(d), 0) + sign * n
+
+        for f in files:
+            add(depth_hist, zones[f]["depth_hist"], 1)
+            add(sel_hist, zones[f]["sel_hist"], 1)
+        # zones written before fetched_hist existed lack it: they overcount
+        # like every summary did then, which the planner tolerates
+        for f in entry["delta"]:
+            add(depth_hist, zones[f].get("fetched_hist", {}), -1)
+            add(sel_hist, zones[f].get("fetched_hist", {}), -1)
+        depth_hist = {d: n for d, n in depth_hist.items() if n > 0}
+        s.update(
+            {
+                "zoned": True,
+                "n_queued": sum(depth_hist.values()),
+                "depth_hist": depth_hist,
+                "sel_hist": {d: n for d, n in sel_hist.items() if n > 0},
+            }
+        )
         return s
 
     def _commit_bucketed(
@@ -526,16 +542,6 @@ class IceTable:
         (see _summarize). This is what planners prune on."""
         return self._resolved_at(snapshot_id)["summary"]
 
-    def bucket_zones(self, snapshot_id: int | None = None) -> dict[str, dict]:
-        """file → zone-map stats dict, assembled from ALL buckets' manifests
-        (diagnostic/test surface — planners use bucket_summaries, which
-        needs no manifest IO)."""
-        bk = self._resolved_at(snapshot_id)
-        out: dict[str, dict] = {}
-        for rel in bk["manifests"].values():
-            out.update(self._read_manifest(rel).get("zones", {}))
-        return out
-
     def files_at(self, snapshot_id: int | None = None) -> list[str]:
         """Every data file of a snapshot (manifest-assembled for bucketed
         tables, inline for plain ones)."""
@@ -551,14 +557,6 @@ class IceTable:
                 out.extend(e["delta"])
             return out
         return snap["files"]
-
-    def delta_fraction(self) -> float:
-        """delta rows / base rows at the current snapshot (compaction gauge)
-        — straight off the snapshot summaries, no manifest IO."""
-        summ = self.bucket_summaries()
-        base = sum(s["base_rows"] for s in summ.values())
-        delta = sum(s["delta_rows"] for s in summ.values())
-        return (delta / base) if base else float("inf")
 
     def commit_empty(self, meta: dict[str, Any] | None = None) -> int:
         """Metadata-only commit (carries counters without rewriting data).
@@ -581,7 +579,13 @@ class IceTable:
         files = self.files_at(snapshot_id)
         if not files:
             raise ValueError(f"icetable {self.path}: no data at snapshot {snapshot_id}")
-        return spark.read.parquet(*files)
+        return self.read_files(spark, files)
+
+    def read_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
+        """``files`` of this table, read with its declared schema when it has
+        one — inferring it costs a footer-reading Spark job per read."""
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(*files)
 
     def rollback(self, snapshot_id: int | None) -> None:
         """Point VERSION back at ``snapshot_id``. ``None`` rolls back to the

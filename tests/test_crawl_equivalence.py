@@ -258,3 +258,26 @@ def test_commit_failure_keeps_corpus_counter_and_resumes(spark, tmp_path, oracle
     assert resumed.round == 1 and resumed._corpus_rows == corpus_rows
     resumed.run(ROUNDS - 1)
     _assert_match(resumed, oracle)
+
+
+def test_bloom_round_job_count(spark, tmp_path, oracle):
+    """Spark jobs of round 2 of a small Bloom crawl, commit chains
+    included. Every table read passes its declared schema, so no round
+    pays a footer-inference job, and no frontier compaction runs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    runner = CrawlRunner(
+        spark, str(tmp_path / "jobs"), round_budget=BUDGET, with_bytes=False,
+        bloom=BloomSeen(n_buckets=8, m_bits=1 << 13, k=5),
+    )
+    runner.init_from_seeds(SEEDS)
+    runner.run_round()
+    # the commit chains run on pool threads, which carry no job group
+    before = set(tracker.getJobIdsForGroup(None))
+    runner.run_round()
+    n_jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    runner.run_round()
+    _assert_match(runner, oracle, check_corpus=False)
+    # 33 with schema inference on every table read and a frontier
+    # compaction each round
+    assert n_jobs == 27

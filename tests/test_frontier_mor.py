@@ -81,12 +81,12 @@ def test_candidates_rank_is_true_host_rank(spark, tbl):
 
 def test_crawl_equivalence_with_salts_and_eager_compaction(spark, tmp_path):
     """salts>1 (giant-host defense → exact window cut) and compaction every
-    round (delta_frac=0) must not change any artifact."""
+    round (max_bucket_files=1) must not change any artifact."""
     oracle = oracle_crawl(SEEDS, rounds=3, round_budget=120)
     runner = run_crawl(
         spark, str(tmp_path / "s"), SEEDS, 3, 120,
         with_bytes=False, frontier_buckets=4, frontier_salts=2,
-        compact_delta_frac=0.0,
+        max_bucket_files=1,
     )
     eng = [
         (r["seq"], r["round"], r["canon_url"])
@@ -95,7 +95,9 @@ def test_crawl_equivalence_with_salts_and_eager_compaction(spark, tmp_path):
     assert eng == oracle.ordering
     assert {r["url_hash"] for r in runner.seen_df().collect()} == oracle.seen
     # eager compaction → frontier has no deltas at rest
-    assert runner.frontier.delta_fraction() == 0.0
+    assert all(
+        s["n_delta_files"] == 0 for s in runner.frontier.bucket_summaries().values()
+    )
 
 
 def test_compaction_is_shuffle_free_and_exact(spark, tbl):
@@ -164,8 +166,9 @@ def test_frontier_delta_commit_is_o_changed(spark, tmp_path):
     runner.run(1)
     snap = runner.frontier.snapshot()
     assert snap["op"] == "append"  # delta, not a rewrite
-    frac = runner.frontier.delta_fraction()
-    assert 0 < frac <= runner.compact_delta_frac
+    summ = runner.frontier.bucket_summaries().values()
+    frac = sum(s["delta_rows"] for s in summ) / sum(s["base_rows"] for s in summ)
+    assert 0 < frac <= 0.5
     assert runner.frontier.last_commit_bytes < base_bytes * 25  # sanity: bounded
 
 
@@ -337,7 +340,7 @@ def test_rebucket_split_preserves_equivalence(spark, tmp_path):
     wd = str(tmp_path / "rb")
     runner = CrawlRunner(
         spark, wd, round_budget=120, with_bytes=False,
-        frontier_buckets=2, frontier_salts=1, compact_delta_frac=0.0,
+        frontier_buckets=2, frontier_salts=1, max_bucket_files=1,
         rows_per_bucket_target=40,
     )
     runner.init_from_seeds(SEEDS)
@@ -483,3 +486,124 @@ def test_seen_verify_reads_bucket_subset(spark, tmp_path):
     for i in infos:
         assert i["suspect_buckets"] <= i["total_buckets"]
         assert i["suspect_buckets"] <= max(i["n_suspects"], 1)
+
+
+# -- exact bucket summaries between compactions --------------------------------
+
+
+def _queued_hist(spark, tbl) -> dict[str, int]:
+    """depth → queued rows of the merged (last-wins) frontier."""
+    rows = (
+        merged_frontier(spark, tbl)
+        .filter(F.col("state") == "queued")
+        .groupBy("depth")
+        .count()
+        .collect()
+    )
+    return {str(r["depth"]): r["count"] for r in rows}
+
+
+def test_bucket_summaries_exact_under_merge_on_read(spark, tmp_path):
+    """Random merge-on-read histories — a base, then deltas mixing fetched
+    transitions with new queued and blocked rows — must give bucket
+    summaries whose queued-depth histogram and queued count equal those of
+    the same buckets after compaction (stale queued versions of fetched
+    URLs are netted out, not counted)."""
+    import random
+    from collections import Counter
+
+    from paperchase_crawler_spark.operators.frontier_select import (
+        compacted_frontier,
+        compute_frontier_zones,
+    )
+
+    nb = 4
+    n_fetched_deltas = 0
+    for seed in range(3):
+        rng = random.Random(seed)
+        tbl = IceTable(str(tmp_path / f"h{seed}"))
+        latest: dict[str, tuple] = {}
+        next_seq = 0
+
+        def fresh(n, rd):
+            nonlocal next_seq
+            out = []
+            for _ in range(n):
+                url = f"https://h{rng.randrange(6)}.example/p/{next_seq}"
+                blocked = rng.random() < 0.2
+                out.append(
+                    _row(
+                        url, state="blocked" if blocked else "queued",
+                        depth=rng.randrange(4), seq=next_seq, rd=rd,
+                        done=rd if blocked else None,
+                    )
+                )
+                next_seq += 1
+            return out
+
+        rows = fresh(40, 0)
+        _write(tbl, _frontier_rows(spark, rows), nb=nb, rev=0)
+        latest.update({r[0]: r for r in rows})
+        for rev in range(1, 5):
+            queued = sorted(u for u, r in latest.items() if r[6] == "queued")
+            picked = rng.sample(queued, min(len(queued), rng.randrange(15)))
+            # fetched replaces the queued version: same key, terminal state
+            upd = [latest[u][:6] + ("fetched", latest[u][7], rev) for u in picked]
+            upd += fresh(rng.randrange(1, 12), rev)
+            n_fetched_deltas += bool(picked)
+            _write(tbl, _frontier_rows(spark, upd), nb=nb, rev=rev)
+            latest.update({r[0]: r for r in upd})
+        before = tbl.bucket_summaries()
+        assert any(s["n_delta_files"] for s in before.values())
+        want = _queued_hist(spark, tbl)
+        queued_depths = Counter(r[3] for r in latest.values() if r[6] == "queued")
+        assert want == {str(d): n for d, n in queued_depths.items()}
+        buckets = sorted(before, key=int)
+        tbl.overwrite_buckets_partial(
+            compacted_frontier(spark, tbl, next_rev=9, buckets=buckets),
+            buckets,
+            zone_fn=lambda files: compute_frontier_zones(spark, files),
+        )
+        after = tbl.bucket_summaries()
+        for b in buckets:
+            assert after[b]["n_delta_files"] == 0
+            assert before[b]["depth_hist"] == after[b]["depth_hist"], (seed, b)
+            assert before[b]["n_queued"] == after[b]["n_queued"], (seed, b)
+        total: dict[str, int] = {}
+        for s in before.values():
+            for d, n in s["depth_hist"].items():
+                total[d] = total.get(d, 0) + n
+        assert total == want
+    assert n_fetched_deltas >= 6  # the histories really carry transitions
+
+
+def test_default_bloom_crawl_keeps_frontier_uncompacted_and_exact(spark, tmp_path):
+    """A 3-round default-layout Bloom crawl: no frontier bucket reaches
+    max_bucket_files, so the frontier is never rewritten, yet every round's
+    SELECT plans on an exact queued count (no stale versions, no fallback)
+    and the crawl equals the oracle."""
+    from paperchase_crawler_spark.operators.seen import BloomSeen
+
+    oracle = oracle_crawl(SEEDS, rounds=3, round_budget=120)
+    runner = CrawlRunner(
+        spark, str(tmp_path / "nc"), round_budget=120, with_bytes=False,
+        bloom=BloomSeen(n_buckets=16, m_bits=1 << 13, k=5),
+    )
+    runner.init_from_seeds(SEEDS)
+    for _ in range(3):
+        n_queued = sum(_queued_hist(spark, runner.frontier).values())
+        runner.run_round()
+        info = runner.crawl_log.snapshot()["meta"]["select_pruning"]
+        assert info["total_queued"] == n_queued, info
+        assert not info["fallback"], info
+    assert "replace" not in _ops(runner.frontier)
+    eng = [
+        (r["seq"], r["round"], r["canon_url"])
+        for r in runner.ordering_df().orderBy("seq").collect()
+    ]
+    assert eng == oracle.ordering
+    assert {r["url_hash"] for r in runner.seen_df().collect()} == oracle.seen
+
+
+def _ops(tbl) -> list[str]:
+    return [tbl.snapshot(s)["op"] for s in tbl.snapshot_ids()]

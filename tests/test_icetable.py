@@ -156,7 +156,9 @@ def test_manifest_metadata_is_o_touched_buckets(spark, tmp_path):
     # summaries carry the per-bucket accounting planners need
     summ = t.bucket_summaries()
     assert summ["3"]["delta_rows"] == 100 and summ["0"]["delta_rows"] == 0
-    assert abs(t.delta_fraction() - 200 / 6400) < 1e-9
+    delta_rows = sum(s["delta_rows"] for s in summ.values())
+    base_rows = sum(s["base_rows"] for s in summ.values())
+    assert abs(delta_rows / base_rows - 200 / 6400) < 1e-9
     # (c) retention vacuums manifests no surviving snapshot references
     n_manifests_before = len(os.listdir(t.manifest_dir))
     t.expire_snapshots(keep_last=1)

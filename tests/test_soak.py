@@ -25,13 +25,12 @@ TIGHT = dict(
     round_budget=BUDGET,
     with_bytes=False,
     frontier_buckets=2,
-    compact_delta_frac=0.3,
     rows_per_bucket_target=150,
     bloom=BloomSeen(n_buckets=32),
     bloom_shards_per_bucket=1,
     bloom_shard_groups=4,
     seen_buckets=8,
-    seen_files_per_bucket=2,
+    max_bucket_files=2,
 )
 
 
@@ -55,7 +54,10 @@ def test_soak_maintenance_composition_oracle_equal(spark, tmp_path):
     snap_sizes = []
     for i in range(ROUNDS):
         runner.run_round()
-        snap_sizes.append(_snap_bytes(runner.frontier))
+        snap_sizes.append(
+            _snap_bytes(runner.frontier)
+            / runner.frontier.snapshot()["meta"]["buckets"]["n"]
+        )
         if i in (4, 7):
             removed = runner.maintain(keep_last=3)
             assert sum(removed.values()) > 0  # retention actually swept
@@ -72,11 +74,12 @@ def test_soak_maintenance_composition_oracle_equal(spark, tmp_path):
     assert eng_order == oracle.ordering
     assert {r["url_hash"] for r in runner.seen_df().collect()} == oracle.seen
     # snapshot metadata is manifest-sharded: no per-file inline lists, and
-    # post-split sizes don't trend with accumulated files (O(buckets) only)
+    # bytes per bucket don't trend with accumulated files (O(buckets) only;
+    # a bucket-count doubling inside the window doubles the raw size)
     snap = runner.frontier.snapshot()
     assert snap["files"] == [] and snap["row_counts"] == {}
-    post_split = snap_sizes[-4:]
-    assert max(post_split) < 2 * min(post_split)
+    window = snap_sizes[-4:]
+    assert max(window) < 2 * min(window)
     # resume still lands exactly on the checkpoint after all that history
     resumed = CrawlRunner.resume(spark, wd)
     assert resumed.round == ROUNDS
