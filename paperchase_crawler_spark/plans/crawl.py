@@ -365,13 +365,13 @@ class CrawlRunner:
         ]
 
     def _maybe_split_buckets(self) -> None:
-        """Re-bucket when any bucket outgrows rows_per_bucket_target (checked
-        after every frontier commit from the snapshot's row counts, which
-        include the not-yet-compacted versions a merge task reads — no data
-        read). Doubling the host-hash
-        bucket count rewrites the whole frontier once (the ONLY non-bucket-
-        local maintenance op, amortized over the growth that triggered it) so
-        per-bucket merge tasks stay memory-bounded as the frontier grows."""
+        """Re-bucket when any bucket outgrows rows_per_bucket_target, checked
+        after every frontier commit from the snapshot's row counts (no data
+        read; they include the not-yet-compacted versions a merge task
+        reads). Doubling the host-hash bucket count rewrites the whole
+        frontier once (the ONLY non-bucket-local maintenance op, amortized
+        over the growth that triggered it) so per-bucket merge tasks stay
+        memory-bounded as the frontier grows."""
         per_bucket = {
             b: s["rows"] for b, s in self.frontier.bucket_summaries().items()
         }
