@@ -12,16 +12,18 @@ frontier") cannot re-shuffle the whole frontier every round. Layout invariant
 - compaction folds a bucket's deltas into a fresh base once the bucket
   holds too many files.
 
-``select_candidates`` plans one narrow task per bucket (per-bucket file scans
-coalesced to one partition, unioned — NO shuffle): each task merges last-wins
-by url_hash, keeps queued rows, and emits each host's top-``max_tokens`` rows
-by R3 order with their per-(host, salt-bucket) rank. Because a host's rows sit
-entirely inside its ``salts`` buckets, survivors are ≤ salts × max_tokens per
-host — the exact politeness cut and the global budget cut then run on that
-tiny set. A frontier round therefore shuffles O(selected + discovered), never
+``select_candidates`` deals whole buckets to one narrow stage of
+``min(buckets, spark.sql.shuffle.partitions)`` tasks (``stage_tasks``, the
+sizing rule every per-round stage follows — NO shuffle): for each of its
+buckets in turn, a task merges last-wins by url_hash, keeps queued rows, and
+emits each host's top-``max_tokens`` rows by R3 order with their
+per-(host, salt-bucket) rank. Because a host's rows sit entirely inside its
+``salts`` buckets, survivors are ≤ salts × max_tokens per host — the exact
+politeness cut and the global budget cut then run on that tiny set. A
+frontier round therefore shuffles O(selected + discovered), never
 O(frontier). ``salts`` is the giant-host defense: it splits one host's rows
-across tasks at the cost of the small exact second cut (operators/politeness
-two-pass argument).
+across buckets (so no single bucket merge holds a giant host whole) at the
+cost of the small exact second cut (operators/politeness two-pass argument).
 
 The merge/top-k kernel is Arrow-native (mapInArrow + numpy lexsort): URL
 strings are never materialized as Python objects (input_hint: no per-row
@@ -38,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..schemas import FRONTIER
-from ..sources.icetable import IceTable
+from ..sources.icetable import IceTable, stage_tasks
 from .materialize import Materializer
 
 # StructType.add mutates in place — build copies
@@ -69,11 +71,14 @@ def frontier_bucket_col(nb: int, salts: int = 1) -> Column:
 
 
 def _bucket_rows(tbl: IceTable, buckets: list[str] | None = None) -> list:
-    """(bucket, files) manifest rows in bucket order; ``buckets`` scopes
-    which manifests are opened (IceTable.bucket_plan)."""
+    """(bucket, files) manifest rows of the non-empty buckets, in bucket
+    order; ``buckets`` scopes which manifests are opened
+    (IceTable.bucket_plan)."""
     plan = tbl.bucket_plan(buckets=buckets)
     return [
-        (int(b), plan[b]["base"] + plan[b]["delta"]) for b in sorted(plan, key=int)
+        (int(b), plan[b]["base"] + plan[b]["delta"])
+        for b in sorted(plan, key=int)
+        if plan[b]["base"] + plan[b]["delta"]
     ]
 
 
@@ -91,50 +96,68 @@ def _last_wins(tbl):
     return tbl.take(pa.array(order[last]))
 
 
+def _bucket_tasks(
+    spark: SparkSession, rows: list, kernel, schema: StructType | str
+) -> DataFrame:
+    """Run ``kernel(share)`` — an Arrow-batch generator over a list of
+    manifest rows — with ``rows`` dealt round-robin to
+    ``stage_tasks(spark, len(rows))`` tasks: task t gets rows t, t + n, ...
+    A row is a whole unit (a bucket's files, or one file), so any dealing is
+    exact. The shares ride in the kernel's closure and each task of a
+    ``spark.range`` picks its own by id: one narrow stage, no shuffle, and
+    no manifest DataFrame for Python to round-trip. Without a catalog Spark
+    has no bucket-aware scan; with a real Iceberg catalog this becomes a
+    bucket-transform storage-partitioned scan."""
+    if not rows:  # empty frontier / all buckets pruned — not a crash
+        return spark.createDataFrame([], schema)
+    n = stage_tasks(spark, len(rows))
+    shares = [rows[t::n] for t in range(n)]
+
+    def fn(batches):
+        for rb in batches:
+            for t in rb.column("id").to_pylist():
+                yield from kernel(shares[t])
+
+    return spark.range(0, n, 1, n).mapInArrow(fn, schema)
+
+
+def _read_bucket(files: list[str], filters=None):
+    """One bucket's files as one Arrow table (base ∪ deltas, with __rev).
+    Column order is normalized and nullability promoted per file: different
+    commits may lay columns out (or infer nullability) differently."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    names = [f.name for f in FRONTIER_REV_SCHEMA.fields]
+    return pa.concat_tables(
+        [pq.read_table(f, filters=filters).select(names) for f in files],
+        promote_options="permissive",
+    ).combine_chunks()
+
+
 def _merge_topk_fn(max_tokens: int, tau: tuple | None = None):
-    """Arrow kernel: read this task's bucket files with pyarrow, last-wins
-    merge by url_hash → queued filter → per-host top-max_tokens by
-    (depth, disc_seq). Exact per task because a bucket holds every version
-    of its URLs and every row of its (host, salt) — several buckets landing
-    in one task only widens the (still-complete) host set.
+    """Arrow kernel over (bucket, files) rows, ONE BUCKET AT A TIME:
+    last-wins merge by url_hash → queued filter → per-host top-max_tokens by
+    (depth, disc_seq). Exact per bucket because a bucket holds every version
+    of its URLs and every row of its (host, salt), and memory-bounded by one
+    bucket (rows_per_bucket_target) however many buckets share a task.
 
     ``tau`` = exclusive (depth, disc_seq) key bound from the zone-map
     planner: only rows with key < tau are read (parquet row-group predicate
-    pushdown on depth — compaction sorts buckets by the key, so groups whose
-    stats exceed tau are skipped without IO). Exact because a URL's key is
-    immutable across versions (every version of a kept URL passes the same
-    filter, so last-wins still sees them all) and the caller VERIFIES that
-    ≥ budget post-cut survivors fall below tau before trusting the result.
+    pushdown on depth — every frontier write sorts a bucket by the key, so
+    groups whose stats exceed tau are skipped without IO). Exact because a
+    URL's key is immutable across versions (every version of a kept URL
+    passes the same filter, so last-wins still sees them all) and the caller
+    VERIFIES that ≥ budget post-cut survivors fall below tau before trusting
+    the result."""
+    filters = [("depth", "<=", int(tau[0]))] if tau is not None else None
 
-    Input rows are (bucket, files) manifest entries — a Python-side bucket
-    scan via mapInArrow rather than a 2×NB-leaf union plan, because without
-    a catalog Spark has no bucket-aware scan: a per-bucket union costs
-    seconds of driver plan-build per round and splinters the scan into
-    per-leaf stubs, while this is one plan leaf whose tasks read their own
-    files at pyarrow speed (measured ~10× faster end-to-end). With a real
-    Iceberg catalog this becomes a bucket-transform storage-partitioned scan
-    and the kernel below keeps only the merge+top-k part."""
-
-    def fn(batches):
+    def bucket_topk(files: list[str]):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        files: list[str] = []
-        for rb in batches:
-            for flist in rb.column("files").to_pylist():
-                files.extend(flist)
-        if not files:
-            return
-        names = [f.name for f in FRONTIER_REV_SCHEMA.fields]
-        filters = [("depth", "<=", int(tau[0]))] if tau is not None else None
-        # normalize column order + promote nullability per file: different
-        # commits may lay columns out (or infer nullability) differently
-        tbl = pa.concat_tables(
-            [pq.read_table(f, filters=filters).select(names) for f in files],
-            promote_options="permissive",
-        ).combine_chunks()
+        tbl = _read_bucket(files, filters)
         if tau is not None and tbl.num_rows:
             d = tbl.column("depth").to_numpy()
             s = tbl.column("disc_seq").to_numpy()
@@ -142,11 +165,11 @@ def _merge_topk_fn(max_tokens: int, tau: tuple | None = None):
                 pa.array((d < tau[0]) | ((d == tau[0]) & (s < tau[1])))
             ).combine_chunks()
         if tbl.num_rows == 0:
-            return
+            return []
         merged = _last_wins(tbl)
         merged = merged.filter(pc.equal(merged.column("state"), "queued"))
         if merged.num_rows == 0:
-            return
+            return []
         merged = merged.combine_chunks()
         hc = merged.column("host").chunk(0).dictionary_encode().indices.to_numpy()
         depth = merged.column("depth").to_numpy()
@@ -171,7 +194,11 @@ def _merge_topk_fn(max_tokens: int, tau: tuple | None = None):
         out = out.select([f.name for f in _SELECT_OUT_SCHEMA.fields]).cast(
             _pa_schema(_SELECT_OUT_SCHEMA)
         )
-        yield from out.to_batches(max_chunksize=8192)
+        return out.to_batches(max_chunksize=8192)
+
+    def fn(rows):
+        for _, files in rows:
+            yield from bucket_topk(files)
 
     return fn
 
@@ -179,20 +206,18 @@ def _merge_topk_fn(max_tokens: int, tau: tuple | None = None):
 def _scan_manifest(
     spark: SparkSession, rows: list, max_tokens: int, tau: tuple | None = None
 ) -> DataFrame:
-    if not rows:  # empty frontier / all buckets pruned — not a crash
-        return spark.createDataFrame([], _SELECT_OUT_SCHEMA)
-    manifest = spark.createDataFrame(
-        rows, "bucket int, files array<string>"
-    ).repartition(len(rows), "bucket")
-    return manifest.mapInArrow(_merge_topk_fn(max_tokens, tau), _SELECT_OUT_SCHEMA)
+    return _bucket_tasks(
+        spark, rows, _merge_topk_fn(max_tokens, tau), _SELECT_OUT_SCHEMA
+    )
 
 
 def select_candidates(
     spark: SparkSession, tbl: IceTable, max_tokens: int
 ) -> DataFrame:
     """Per-host top-``max_tokens`` queued candidates with per-(host, salt)
-    rank ``__host_rank`` — one Arrow task per bucket reading only its own
-    files; the only thing that moves is the NB-row file manifest."""
+    rank ``__host_rank`` — whole buckets dealt to
+    ``stage_tasks(spark, n_buckets)`` Arrow tasks, each reading only its own
+    buckets' files; nothing moves but the file manifest in the closure."""
     return _scan_manifest(spark, _bucket_rows(tbl), max_tokens)
 
 
@@ -300,24 +325,16 @@ def compute_frontier_zones(
             stats = pool.map(lambda f: _zone_stats_one(f, max_tokens), files)
             return dict(zip(files, stats))
 
-    def _stats(batches):
+    def _stats(share):
         import pyarrow as pa
 
-        for rb in batches:
-            names = rb.column("file").to_pylist()
-            zones = [_zone_stats_one(f, max_tokens) for f in names]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "file": names,
-                    **{h: [json.dumps(z[h]) for z in zones] for h in _HISTS},
-                },
-                schema=pa.schema([(c, pa.string()) for c in ("file", *_HISTS)]),
-            )
+        zones = [_zone_stats_one(f, max_tokens) for f in share]
+        yield pa.RecordBatch.from_pydict(
+            {"file": share, **{h: [json.dumps(z[h]) for z in zones] for h in _HISTS}},
+            schema=pa.schema([(c, pa.string()) for c in ("file", *_HISTS)]),
+        )
 
-    mf = spark.createDataFrame([(f,) for f in files], "file string").repartition(
-        min(len(files), 64), "file"
-    )
-    rows = mf.mapInArrow(_stats, _ZONE_SCHEMA).collect()
+    rows = _bucket_tasks(spark, files, _stats, _ZONE_SCHEMA).collect()
     return {
         r["file"]: {h: {int(d): n for d, n in json.loads(r[h]).items()} for h in _HISTS}
         for r in rows
@@ -512,52 +529,26 @@ def exact_per_host_cut(candidates: DataFrame, salts: int) -> DataFrame:
 
 
 def _merge_buckets_fn(next_rev: int):
-    """Arrow kernel for COMPACTION: per manifest row (one bucket), last-wins
-    merge of base ∪ deltas, re-tagged with the compacted commit's __rev and
-    the bucket's __fb — rows never leave their bucket, so the compacted base
-    can be written back with NO shuffle (one task per bucket reads its own
-    files and writes its own file)."""
+    """Arrow kernel for COMPACTION over (bucket, files) rows, one bucket at
+    a time: last-wins merge of base ∪ deltas, re-tagged with the compacted
+    commit's __rev and the bucket's __fb — rows never leave their bucket, so
+    the compacted base can be written back with NO shuffle (each task reads
+    and writes only its own buckets)."""
 
-    def fn(batches):
+    def fn(rows):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        names = [f.name for f in FRONTIER_REV_SCHEMA.fields]
         base_names = [f.name for f in FRONTIER.fields]
-        for rb in batches:
-            buckets = rb.column("bucket").to_pylist()
-            file_lists = rb.column("files").to_pylist()
-            for bucket, files in zip(buckets, file_lists):
-                if not files:
-                    continue
-                tbl = pa.concat_tables(
-                    [pq.read_table(f).select(names) for f in files],
-                    promote_options="permissive",
-                ).combine_chunks()
-                merged = _last_wins(tbl).select(base_names)
-                # write back sorted by the priority key: row groups then carry
-                # tight (depth, disc_seq) stats, so the pruned SELECT's
-                # parquet predicate pushdown skips cold groups without IO
-                merged = merged.take(
-                    pa.array(
-                        np.lexsort(
-                            (
-                                merged.column("disc_seq").to_numpy(),
-                                merged.column("depth").to_numpy(),
-                            )
-                        )
-                    )
-                )
-                n = merged.num_rows
-                out = merged.append_column(
-                    "__rev", pa.array(np.full(n, next_rev, dtype=np.int32))
-                ).append_column(
-                    "__fb", pa.array(np.full(n, bucket, dtype=np.int32))
-                )
-                yield from out.cast(_pa_schema(_COMPACT_SCHEMA)).to_batches(
-                    max_chunksize=8192
-                )
+        for bucket, files in rows:
+            merged = _last_wins(_read_bucket(files)).select(base_names)
+            n = merged.num_rows
+            out = merged.append_column(
+                "__rev", pa.array(np.full(n, next_rev, dtype=np.int32))
+            ).append_column("__fb", pa.array(np.full(n, bucket, dtype=np.int32)))
+            yield from out.cast(_pa_schema(_COMPACT_SCHEMA)).to_batches(
+                max_chunksize=8192
+            )
 
     return fn
 
@@ -574,23 +565,19 @@ def compacted_frontier(
     buckets: list[str] | None = None,
 ) -> DataFrame:
     """Merged frontier WITH layout columns (__rev, __fb), bucket-local and
-    shuffle-free — feed straight to overwrite_bucketed for compaction.
-    ``buckets`` scopes the merge to a subset (partial compaction via
-    overwrite_buckets_partial: cold buckets are neither read nor rewritten)."""
-    rows = _bucket_rows(tbl, buckets)
-    if not rows:
-        return spark.createDataFrame([], _COMPACT_SCHEMA)
-    manifest = spark.createDataFrame(
-        rows, "bucket int, files array<string>"
-    ).repartition(len(rows), "bucket")
-    return manifest.mapInArrow(_merge_buckets_fn(next_rev), _COMPACT_SCHEMA)
+    shuffle-free — sort it within partitions by (__fb, depth, disc_seq) and
+    feed it to overwrite_buckets_partial for compaction. ``buckets`` scopes
+    the merge to a subset (cold buckets are neither read nor rewritten)."""
+    return _bucket_tasks(
+        spark, _bucket_rows(tbl, buckets), _merge_buckets_fn(next_rev), _COMPACT_SCHEMA
+    )
 
 
 def merged_frontier(spark: SparkSession, tbl: IceTable) -> DataFrame:
-    """Public merged (last-wins) view — BUCKET-LOCAL: one Arrow task per
-    bucket merges its own base ∪ delta files; no Exchange beyond the tiny
-    manifest repartition, so a caller on a 10^10-row frontier never trips a
-    full-table shuffle (r2 verdict "What's wrong" #3)."""
+    """Public merged (last-wins) view — BUCKET-LOCAL: each Arrow task merges
+    its own buckets' base ∪ delta files with no Exchange, so a caller on a
+    10^10-row frontier never trips a full-table shuffle (r2 verdict "What's
+    wrong" #3)."""
     cols = [f.name for f in FRONTIER.fields]
     return compacted_frontier(spark, tbl, next_rev=0).select(*cols)
 

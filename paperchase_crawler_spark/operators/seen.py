@@ -223,7 +223,7 @@ def filter_new_bucketed(
     info["files_read"] = len(files)
     if not files:
         return certain_new.unionByName(suspects), info
-    seen_sub = spark.read.schema(f"{key} long").parquet(*files)
+    seen_sub = seen_tbl.read_files(spark, files)
     truly_seen = seen_sub.join(
         F.broadcast(suspects.select(key)), on=key, how="left_semi"
     )

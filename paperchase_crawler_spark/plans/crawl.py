@@ -27,9 +27,9 @@ parallelism, and AQE decisions. pytest asserts exact ordering/seen/corpus
 equality against oracle/crawler.py at two parallelism levels.
 
 Scale notes (10^10 design point): a round touches O(selected + discovered)
-rows, never O(frontier) — SELECT is a narrow per-bucket scan (the bucket
-layout IS the partitioning), the frontier commit appends only the round's
-state transitions + new rows (merge-on-read, compaction-managed), the Bloom
+rows, never O(frontier) — SELECT is a narrow scan of whole buckets (the
+bucket layout IS the partitioning), the frontier commit appends only the
+round's state transitions + new rows (merge-on-read, compaction-managed), the Bloom
 commit appends only the round's new-key shards (probe ORs shard rows), and
 images never enter wide shuffles (corpus bytes take the append-only path).
 The seen-set verify is Bloom-pre-filtered AND bucket-pruned: only ~FPR of
@@ -73,17 +73,24 @@ from ..operators.seen import BloomSeen, filter_new, filter_new_bucketed
 from ..schemas import (
     BLOOM_SHARD, CORPUS, CRAWL_LOG, HOST_STATE, HOST_TOUCH, ORDERING, URL_SEEN,
 )
-from ..sources.icetable import IceTable
+from ..sources.icetable import IceTable, stage_tasks
 
 FRONTIER_COLS = [
     "canon_url", "url_hash", "host", "depth", "disc_seq",
     "priority", "state", "round_disc", "round_done",
 ]
 
-# fetch-stage sizing floor: enough URLs per Python task to amortize the
-# worker round-trip; the shuffle.partitions cap keeps production rounds at
-# full cluster width (a 400k-URL round still fans out to every slot)
+# the fetch stage's unit of work for stage_tasks, the one sizing rule of
+# every per-round stage (min(units, shuffle.partitions)): enough URLs per
+# Python task to amortize the worker round-trip, while a 400k-URL round
+# still fans out to every slot
 FETCH_URLS_PER_TASK = 16
+
+# order of every frontier file: the writer's partitionBy needs __fb first,
+# and the priority key after it gives each bucket file tight row-group
+# (depth, disc_seq) stats, so the zone-pruned SELECT skips cold row groups
+# via parquet pushdown
+_FRONTIER_FILE_ORDER = ("__fb", "depth", "disc_seq")
 
 
 class CrawlRunner:
@@ -278,10 +285,12 @@ class CrawlRunner:
         return (
             df.withColumn("__rev", F.lit(self.frontier._next_sid()).cast("int"))
             .withColumn("__fb", frontier_bucket_col(nb, s))
-            .repartition(nb * s, F.col("__fb"))
-            # priority-key order inside each file → row-group stats let the
-            # zone-pruned SELECT skip cold row groups via parquet pushdown
-            .sortWithinPartitions("depth", "disc_seq")
+            # hash-partitioned on __fb: a bucket stays in one task, so every
+            # commit still writes one file per touched bucket
+            .repartition(stage_tasks(self.spark, nb * s), F.col("__fb"))
+            # a sort without __fb first is dropped for the writer's own
+            # sort on __fb, which discards the key order
+            .sortWithinPartitions(*_FRONTIER_FILE_ORDER)
         )
 
     def _frontier_disc_hwm(self) -> int:
@@ -324,10 +333,10 @@ class CrawlRunner:
         holds more than max_bucket_files files, i.e. when a read of it must
         open too many; between compactions the bucket summaries stay exact
         (IceTable._summarize). Compaction is bucket-local AND bucket-scoped:
-        one task per hot bucket merges its own base ∪ delta files and writes
-        its own compacted file — no shuffle (rows never change bucket), and
-        other buckets are neither read nor rewritten
-        (overwrite_buckets_partial)."""
+        whole hot buckets are dealt to stage_tasks tasks, each merging a
+        bucket's base ∪ delta files into one compacted file — no shuffle
+        (rows never change bucket), and other buckets are neither read nor
+        rewritten (overwrite_buckets_partial)."""
         self.frontier.append_bucketed_delta(
             self._with_layout(df.select(*FRONTIER_COLS)),
             meta=meta,
@@ -350,7 +359,9 @@ class CrawlRunner:
                 else {}
             )
             self.frontier.overwrite_buckets_partial(
-                merged, hot, meta={"op": "compaction", **carry},
+                merged.sortWithinPartitions(*_FRONTIER_FILE_ORDER),
+                hot,
+                meta={"op": "compaction", **carry},
                 zone_fn=self._zone_fn,
             )
         self._maybe_split_buckets()
@@ -423,7 +434,7 @@ class CrawlRunner:
         sb = self.seen_buckets
         return df.select("url_hash").withColumn(
             "__fb", F.pmod(F.col("url_hash"), F.lit(sb)).cast("int")
-        ).repartition(sb, F.col("__fb"))
+        ).repartition(stage_tasks(self.spark, sb), F.col("__fb"))
 
     def _maybe_compact_seen(self, r: int) -> None:
         """Fold a seen bucket's delta files into one once it holds more than
@@ -615,20 +626,17 @@ class CrawlRunner:
         # and these rows are tiny but each costs real Python fetch work —
         # AQE would starve the stage down to ~4 tasks. Image bytes never
         # enter this plan: they stream through pass 2 into the corpus sink.
-        # The count is SIZE-ADAPTIVE: n_selected is already exact from the
-        # budget cut's counts job (guide §2: derive partitioning from input
-        # size, not a constant) — small rounds stop paying shuffle.partitions
-        # worth of Python task round-trips, large rounds keep the full width.
-        n_sel_exact = prune_info.get("n_selected")
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        # The count follows stage_tasks: n_selected is already exact from
+        # the budget cut's counts job, so a small round runs as many tasks as
+        # it has FETCH_URLS_PER_TASK units, and a large one every slot.
+        n_sel_exact = prune_info["n_selected"]
         if n_sel_exact == 0:
             # nothing selectable this round: commit the checkpoint without
             # launching the fetch/expand machinery at all
             self.round = r
             self._commit_checkpoint()
             return {"round": r, "n_selected": 0, "n_new": 0, "n_images": 0}
-        if n_sel_exact is not None:
-            n_parts = max(1, min(n_parts, -(-n_sel_exact // FETCH_URLS_PER_TASK)))
+        n_parts = stage_tasks(spark, -(-n_sel_exact // FETCH_URLS_PER_TASK))
         fetched = (
             ranked.repartition(n_parts, F.col("url_hash"))
             .mapInArrow(fetch_outlinks_map_in_arrow(), OUTLINKS_SCHEMA)

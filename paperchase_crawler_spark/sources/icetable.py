@@ -26,12 +26,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# reads of more paths than this session setting list them in a Spark job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 
 
 def _row_counts(files: list[str]) -> dict[str, int]:
@@ -46,6 +51,15 @@ def _row_counts(files: list[str]) -> dict[str, int]:
     with ThreadPoolExecutor(min(16, len(files))) as pool:
         counts = pool.map(lambda f: pq.ParquetFile(f).metadata.num_rows, files)
         return dict(zip(files, counts))
+
+
+def stage_tasks(spark: SparkSession, units: int) -> int:
+    """The one sizing rule for a per-round stage over a table: one task per
+    unit of work (a bucket, a file, or a batch of fetched URLs), capped at
+    the session's ``spark.sql.shuffle.partitions``. A Python task costs a
+    fixed ~0.2 s per wave of slots whatever its data, so a small round's
+    stage should be as wide as the slots, not as the table's layout."""
+    return max(1, min(units, int(spark.conf.get("spark.sql.shuffle.partitions"))))
 
 
 class IceTable:
@@ -583,9 +597,26 @@ class IceTable:
 
     def read_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
         """``files`` of this table, read with its declared schema when it has
-        one — inferring it costs a footer-reading Spark job per read."""
+        one — inferring it costs a footer-reading Spark job per read.
+
+        The snapshot already names every file, so the read must not list
+        them either: Spark lists a read's paths in a Spark job of one task
+        per path once they exceed the session's
+        ``parallelPartitionDiscovery.threshold`` (a per-read option does not
+        reach it). The threshold is raised to the path count, never lowered,
+        and under a lock, so no read of the concurrent commit chains sees it
+        drop below its own path count while Spark lists its paths.
+
+        The scan is sized by ``stage_tasks`` over the files (a narrow
+        coalesce, a no-op when Spark splits them into fewer tasks): Spark
+        packs small files ~4 MB apart, so a table whose bucket files pile up
+        between compactions would otherwise widen its read every round."""
         reader = spark.read if self.schema is None else spark.read.schema(self.schema)
-        return reader.parquet(*files)
+        with _LISTING_LOCK:
+            if int(spark.conf.get(_LISTING_THRESHOLD)) < len(files):
+                spark.conf.set(_LISTING_THRESHOLD, str(len(files)))
+            df = reader.parquet(*files)
+        return df.coalesce(stage_tasks(spark, len(files)))
 
     def rollback(self, snapshot_id: int | None) -> None:
         """Point VERSION back at ``snapshot_id``. ``None`` rolls back to the

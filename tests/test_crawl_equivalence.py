@@ -260,24 +260,52 @@ def test_commit_failure_keeps_corpus_counter_and_resumes(spark, tmp_path, oracle
     _assert_match(resumed, oracle)
 
 
-def test_bloom_round_job_count(spark, tmp_path, oracle):
-    """Spark jobs of round 2 of a small Bloom crawl, commit chains
-    included. Every table read passes its declared schema, so no round
-    pays a footer-inference job, and no frontier compaction runs."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+@pytest.fixture(scope="module")
+def bloom_round_2(spark, tmp_path_factory, oracle):
+    """Round 2 of a small Bloom crawl: (Spark job ids, {stage id: tasks}).
+    The commit chains run on pool threads, which carry no job group, so
+    every job of the round is an ungrouped job started during it."""
+    tracker = spark.sparkContext.statusTracker()
     runner = CrawlRunner(
-        spark, str(tmp_path / "jobs"), round_budget=BUDGET, with_bytes=False,
-        bloom=BloomSeen(n_buckets=8, m_bits=1 << 13, k=5),
+        spark, str(tmp_path_factory.mktemp("jobs")), round_budget=BUDGET,
+        with_bytes=False, bloom=BloomSeen(n_buckets=8, m_bits=1 << 13, k=5),
     )
     runner.init_from_seeds(SEEDS)
     runner.run_round()
-    # the commit chains run on pool threads, which carry no job group
     before = set(tracker.getJobIdsForGroup(None))
     runner.run_round()
-    n_jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    stages = {
+        s: tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    }
     runner.run_round()
     _assert_match(runner, oracle, check_corpus=False)
+    return jobs, stages
+
+
+def test_bloom_round_job_count(bloom_round_2):
+    """Spark jobs of round 2, commit chains included. Every table read
+    passes its declared schema, so no round pays a footer-inference job, and
+    no frontier compaction runs."""
+    jobs, _ = bloom_round_2
     # 33 with schema inference on every table read and a frontier
-    # compaction each round
-    assert n_jobs == 27
+    # compaction each round; 27 while SELECT shuffled its bucket manifest
+    # and table reads were not sized by their file count
+    assert len(jobs) == 25
+
+
+def test_bloom_round_stage_width(spark, bloom_round_2):
+    """No stage of round 2 is wider than the session's task slots: every
+    per-round stage is sized by stage_tasks (16 frontier buckets, 64 seen
+    buckets and the fetched URLs all land on shuffle.partitions tasks), and
+    no table read launches a file-listing job. One stage may run one task
+    more: the frontier delta unions the fetched rows (up to
+    shuffle.partitions partitions) with the one-partition cut of the new
+    rows before its write shuffle."""
+    _, stages = bloom_round_2
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(stages) > 20
+    assert max(stages.values()) <= n_parts + 1, stages

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from oracle.crawler import crawl as oracle_crawl
@@ -98,6 +99,52 @@ def test_crawl_equivalence_with_salts_and_eager_compaction(spark, tmp_path):
     assert all(
         s["n_delta_files"] == 0 for s in runner.frontier.bucket_summaries().values()
     )
+    # 8 buckets on fewer tasks: one host's salt buckets can share a task, and
+    # the packed SELECT still equals the per-host top-k of the reference merge
+    from paperchase_crawler_spark.operators.frontier_select import (
+        exact_per_host_cut,
+        merged_frontier_reference,
+    )
+
+    k = runner.max_tokens
+    cand = select_candidates(spark, runner.frontier, k)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert cand.rdd.getNumPartitions() == n_parts < len(
+        runner.frontier.bucket_summaries()
+    )
+    got = exact_per_host_cut(
+        cand.withColumn("tokens_per_round", F.lit(k)), salts=2
+    ).select("url_hash").collect()
+    ref = merged_frontier_reference(spark, runner.frontier).filter(
+        F.col("state") == "queued"
+    )
+    w = Window.partitionBy("host").orderBy("depth", "disc_seq")
+    want = ref.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+    assert sorted(r[0] for r in got) == sorted(
+        r[0] for r in want.select("url_hash").collect()
+    )
+    assert got
+
+
+def test_frontier_files_sorted_by_key(spark, tmp_path):
+    """Every frontier file — delta appends and compaction rewrites alike —
+    is sorted by (depth, disc_seq), so its row-group stats are tight for
+    the zone-pruned SELECT's parquet pushdown, even though every write task
+    holds several buckets."""
+    import pyarrow.parquet as pq
+
+    runner = run_crawl(
+        spark, str(tmp_path / "sorted"), SEEDS, 3, 120, with_bytes=False,
+        max_bucket_files=2,
+    )
+    tbl = runner.frontier
+    assert "compaction" in {tbl.snapshot(i)["meta"].get("op") for i in tbl.snapshot_ids()}
+    files = tbl.files_at()
+    assert len(files) > 16
+    for f in files:
+        t = pq.read_table(f, columns=["depth", "disc_seq"])
+        key = list(zip(t.column("depth").to_pylist(), t.column("disc_seq").to_pylist()))
+        assert key == sorted(key), f
 
 
 def test_compaction_is_shuffle_free_and_exact(spark, tbl):
